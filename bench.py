@@ -623,31 +623,16 @@ def _measure() -> dict:
         except Exception as exc:
             sf_scaling["streaming_error"] = f"{type(exc).__name__}: {exc}"
 
-    # r5 (VERDICT r4 item 4): state-v1 vs state-v2 pane throughput on a
-    # 200k-event synthetic drain, so the demo2 --stateful-api default is
-    # re-validated by data every round (recommendation in SCALING.md).
-    tws_vs_v1 = None
-    pane_key_curve = None
-    if os.environ.get("SPARK_GRAFT_TWS_BENCH", "1") != "0":
-        try:
-            from tools.tws_bench import (
-                pane_key_scaling_section,
-                tws_vs_v1_section,
-            )
+    # The pane operator's key-count curve (VERDICT r5 item 6): its wall
+    # tracks distinct keys per micro-batch, not event volume.
+    try:
+        from tools.pane_attrib import pane_key_curve_section
 
-            # min-of-SWEEP_REPEATS like every other recorded number (r6):
-            # single-sample curve points drifted 4.4->6.1 s run-to-run.
-            tws_vs_v1 = tws_vs_v1_section(spark, runs=SWEEP_REPEATS)
-            # r6 (VERDICT r5 item 6): the same drain at 3x/10x key
-            # counts, both APIs — reuses the run above as the 1x point.
-            pane_key_curve = pane_key_scaling_section(
-                spark, base=tws_vs_v1, runs=SWEEP_REPEATS
-            )
-        except Exception as exc:
-            tws_vs_v1 = tws_vs_v1 or {
-                "error": f"{type(exc).__name__}: {exc}"
-            }
-            pane_key_curve = {"error": f"{type(exc).__name__}: {exc}"}
+        # min-of-SWEEP_REPEATS like every other recorded number (r6):
+        # single-sample curve points drifted 4.4->6.1 s run-to-run.
+        pane_key_curve = pane_key_curve_section(spark, runs=SWEEP_REPEATS)
+    except Exception as exc:  # never fail the bench over the extra check
+        pane_key_curve = {"error": f"{type(exc).__name__}: {exc}"}
 
     # Self-adjudication (VERDICT r6 #2): stamp the artifact contaminated
     # when either the gate gave up (run started into ambient load anyway)
@@ -712,7 +697,6 @@ def _measure() -> dict:
             "all_queries_total": round(sum(timings.values()), 3),
             "family_totals": families,
             "sf_scaling": sf_scaling,
-            "tws_vs_v1": tws_vs_v1,
             "pane_key_curve": pane_key_curve,
             "headline_samples": headline_samples,
             "loadavg_start": load_start,
@@ -791,7 +775,7 @@ def _emit(result: dict) -> None:
     # stdout gets a COMPACT line that FITS the driver's tail budget
     # (VERDICT r5 item 3): headline metric + all 50 per-query numbers +
     # the two scalar extras, minimal whitespace (~1.7k chars). The bulky
-    # extras (sf_scaling, tws_vs_v1, family_totals) live in
+    # extras (sf_scaling, pane_key_curve, family_totals) live in
     # bench_last.json, pointed to by "full".
     slim = {
         "metric": result["metric"],

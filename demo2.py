@@ -8,10 +8,12 @@ event time with 1-minute allowed skew, 1-minute tumbling windows with
 
     python demo2.py --input /path/to/messages --output /path/to/table \
         --checkpoint /path/to/ckpt [--window "1 minute"] \
-        [--skew "1 minute"] [--lateness "1 minute"] [--follow]
+        [--skew "1 minute"] [--lateness "1 minute"] [--follow] \
+        [--no-finalize] [--firing watermark|discarding-panes]
 
 Beam's separate skew and lateness compose into one Spark watermark delay
-(their sum) — see SURVEY §7.4.2.
+(their sum) — see SURVEY §7.4.2. `--firing discarding-panes` runs the
+applyInPandasWithState pane emitter (streaming/stateful.py).
 """
 
 from __future__ import annotations
@@ -49,20 +51,8 @@ def main() -> None:
         help="watermark = one final row per window (AfterWatermark "
         "firing, the default); discarding-panes = Beam's "
         ".discardingFiredPanes() repeated trigger: one delta row per "
-        "firing with its pane ordinal (Demo2.java:151-157)",
-    )
-    ap.add_argument(
-        "--stateful-api",
-        choices=["v1", "v2"],
-        default="v1",
-        help="discarding-panes only: v1 = applyInPandasWithState (any "
-        "state-store provider; measured faster at warm steady state at "
-        "EVERY key count on the 1x/3x/10x curve re-recorded each round "
-        "— the data-driven default, see SCALING.md `pane_key_curve`), "
-        "v2 = transformWithStateInPandas (typed state + timers; "
-        "requires/auto-selects RocksDB; flat key-count slope — "
-        "extrapolated crossover ~10-15k keys/micro-batch — and wins "
-        "when per-key state is large or needs TTL/ListState/MapState)",
+        "firing with its pane ordinal (Demo2.java:151-157), emitted by "
+        "the applyInPandasWithState pane operator",
     )
     args = ap.parse_args()
 
@@ -80,7 +70,6 @@ def main() -> None:
             window=args.window,
             allowed_skew=args.skew,
             allowed_lateness=args.lateness,
-            stateful_api=args.stateful_api,
             available_now=not args.follow,
         )
     else:

@@ -13,15 +13,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tutorial_apache_beam_spark import get_spark
 from tutorial_apache_beam_spark.catalog import TABLES
-from tutorial_apache_beam_spark.protoshim import ensure_protobuf_runtime
-
-# Activate the vendored protobuf runtime (if the real wheel is absent)
-# BEFORE any fixture launches the JVM, so Python workers inherit the
-# PYTHONPATH and the state-v2 (transformWithState) e2e tests can run.
-try:
-    PROTOBUF_RUNTIME = ensure_protobuf_runtime()
-except ImportError:  # pragma: no cover - shim should always import
-    PROTOBUF_RUNTIME = None
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

@@ -89,15 +89,21 @@ def test_demo2_cli_end_to_end(spark, tmp_path, monkeypatch):
     assert all(n == 3 for n in rows.values())
 
 
-def test_demo2_cli_discarding_panes_both_apis(spark, tmp_path, monkeypatch):
-    """--firing discarding-panes through both stateful APIs: same CLI,
-    same input, row-identical pane output (the v1/v2 parity contract at
-    the CLI surface). Multi-file input so at least one window fires more
-    than once."""
+def test_demo2_cli_discarding_panes(spark, tmp_path, monkeypatch):
+    """--firing discarding-panes through the CLI: two drains over the same
+    --checkpoint, so the window fires twice — a 3-click pane at ordinal
+    0, then a 1-click delta pane at ordinal 1."""
     import demo2
 
     src = tmp_path / "src"
     src.mkdir()
+    argv = [
+        "demo2.py",
+        "--input", str(src),
+        "--output", str(tmp_path / "out"),
+        "--checkpoint", str(tmp_path / "ckpt"),
+        "--firing", "discarding-panes",
+    ]
     (src / "b0.json").write_text(
         "\n".join(
             json.dumps({"event_time": BASE_EPOCH + i, "user_id": 7, "click": 1})
@@ -105,42 +111,24 @@ def test_demo2_cli_discarding_panes_both_apis(spark, tmp_path, monkeypatch):
         )
         + "\n"
     )
+    _run_main(monkeypatch, demo2, argv)
     (src / "b1.json").write_text(
         json.dumps({"event_time": BASE_EPOCH + 10, "user_id": 7, "click": 1})
         + "\n"
     )
+    _run_main(monkeypatch, demo2, argv)
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    outs = {}
-    for api in ("v1", "v2"):
-        sink = tmp_path / f"out_{api}"
-        _run_main(
-            monkeypatch,
-            demo2,
-            [
-                "demo2.py",
-                "--input", str(src),
-                "--output", str(sink),
-                "--checkpoint", str(tmp_path / f"ckpt_{api}"),
-                "--firing", "discarding-panes",
-                "--stateful-api", api,
-            ],
+    rows = sorted(
+        (
+            r["window_start"].isoformat(),
+            r["user_id"],
+            r["pane_count"],
+            r["pane_index"],
         )
-        outs[api] = sorted(
-            (
-                r["window_start"].isoformat(),
-                r["user_id"],
-                r["pane_count"],
-                r["pane_index"],
-            )
-            for r in spark.read.parquet(str(sink)).collect()
-        )
-    # demo2_panes_pipeline(v2) switches the session provider to RocksDB;
-    # restore so later tests in this session see the default again
-    if old_provider is None:
-        spark.conf.unset(provider_key)
-    else:
-        spark.conf.set(provider_key, old_provider)
-    assert outs["v1"] == outs["v2"]
-    assert sum(r[2] for r in outs["v1"]) == 4  # every click in some pane
+        for r in spark.read.parquet(str(tmp_path / "out")).collect()
+    )
+    assert rows == [
+        ("2024-01-01T00:00:00", 7, 1, 1),
+        ("2024-01-01T00:00:00", 7, 3, 0),
+    ]
+    assert sum(r[2] for r in rows) == 4  # every click in some pane

@@ -118,6 +118,64 @@ def test_timeout_flush_preserves_batch_sequence():
     assert st2.get == (3, [])
 
 
+def test_stale_timer_across_microbatches_flushes_once(spark, tmp_path):
+    """The stale-timer interleaving only real micro-batches reach: one file
+    per trigger, with pinned ascending mtimes, so event time rises batch
+    over batch. From batch 1 on, the previous batch's remainder timer is
+    already due while new rows for the key arrive in the same
+    micro-batch. batch_size exceeds the input, so every element rides the
+    final timer flush: ONE batch holding all six elements, not several
+    premature partials (with a seq collision)."""
+    import json
+    import os
+    import time
+
+    src = tmp_path / "src"
+    src.mkdir()
+    base = 1704067230  # 2024-01-01 00:00:30 UTC
+    now = time.time()
+    for k in range(3):
+        name = src / f"b{k}.json"
+        name.write_text(
+            "\n".join(
+                json.dumps(
+                    {"event_time": base + 100 * k + i, "user_id": 7,
+                     "event_id": 10 * k + i}
+                )
+                for i in range(2)
+            )
+            + "\n"
+        )
+        os.utime(name, (now + k * 10, now + k * 10))
+
+    stream = (
+        spark.readStream.schema(
+            "event_time BIGINT, user_id BIGINT, event_id BIGINT"
+        )
+        .option("maxFilesPerTrigger", "1")
+        .json(str(src))
+        .select(
+            F.timestamp_seconds("event_time").alias("ts"), "user_id", "event_id"
+        )
+        .withWatermark("ts", "0 seconds")
+    )
+    q = (
+        group_into_batches(stream, batch_size=100)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = sorted(
+        (r["user_id"], r["batch_seq"], r["batch_size"], sorted(r["element_ids"]))
+        for r in spark.read.parquet(str(tmp_path / "out")).collect()
+    )
+    assert got == [(7, 0, 6, [0, 1, 10, 11, 20, 21])]
+
+
 def test_null_element_ids_are_dropped():
     import pandas as pd
 
@@ -136,15 +194,13 @@ def test_batch_size_validated_at_driver(spark):
     from tutorial_apache_beam_spark.streaming.batching import (
         group_into_batches,
     )
-    from tutorial_apache_beam_spark.streaming.tws import (
-        tws_group_into_batches,
-    )
 
     sdf = spark.readStream.format("rate").load()
-    with pytest.raises(ValueError, match="batch_size"):
-        group_into_batches(sdf, key_col="value", element_col="value", batch_size=0)
-    with pytest.raises(ValueError, match="batch_size"):
-        tws_group_into_batches(sdf, key_col="value", element_col="value", batch_size=-1)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="batch_size"):
+            group_into_batches(
+                sdf, key_col="value", element_col="value", batch_size=bad
+            )
 
 
 def test_duration_parser_accepts_compound_and_week_intervals():

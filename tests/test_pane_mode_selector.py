@@ -305,17 +305,11 @@ def test_pane_key_contract_name_and_type(spark, tmp_path):
             key_col="tskey", mode="discarding", expected_keys=10,
         )
     # (c) reserved key names collide with the pane output schema —
-    # refused at plan time on both twins (ADVICE r10 item 1).
-    from tutorial_apache_beam_spark.streaming.tws import tws_pane_counts
-
+    # refused at plan time (ADVICE r10 item 1).
     renamed = stream.withColumnRenamed("device_id", "pane_index")
-    for build in (
-        lambda: pane_counts(renamed, key_col="pane_index",
-                            mode="discarding", expected_keys=10),
-        lambda: tws_pane_counts(renamed, key_col="pane_index"),
-    ):
-        with pytest.raises(ValueError, match="collides with a pane"):
-            build()
+    with pytest.raises(ValueError, match="collides with a pane"):
+        pane_counts(renamed, key_col="pane_index", mode="discarding",
+                    expected_keys=10)
 
 
 def test_non_count_combiner_refuses_pane_accumulation(spark, tmp_path):

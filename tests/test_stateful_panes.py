@@ -3,10 +3,15 @@
 from __future__ import annotations
 
 import json
+import os
+import time
 
 from pyspark.sql import functions as F
 
-from tutorial_apache_beam_spark.streaming.stateful import discarding_pane_counts
+from tutorial_apache_beam_spark.streaming.stateful import (
+    discarding_pane_aggregate,
+    discarding_pane_counts,
+)
 
 BASE_EPOCH = 1704067230  # 2024-01-01 00:00:30 UTC
 RAW_SCHEMA = "event_time BIGINT, user_id BIGINT"
@@ -18,15 +23,26 @@ def _write(src_dir, name, rows):
     )
 
 
-def _run(spark, src, ckpt, sink):
+def _write_ordered(src_dir, files):
+    """Write `files` ([(name, rows)]) with pinned ascending mtimes: the file
+    source orders by modification time, so with maxFilesPerTrigger=1 each
+    file is its own micro-batch, in list order."""
+    now = time.time()
+    for k, (name, rows) in enumerate(files):
+        _write(src_dir, name, rows)
+        os.utime(src_dir / name, (now + k * 10, now + k * 10))
+
+
+def _run(spark, src, ckpt, sink, op=discarding_pane_counts, one_file_per_batch=False):
     """availableNow run into a parquet sink (memory sinks can't recover
     from a checkpoint across restarts); returns the full sink contents."""
-    stream = (
-        spark.readStream.schema(RAW_SCHEMA)
-        .json(str(src))
-        .select(F.timestamp_seconds("event_time").alias("ts"), "user_id")
+    reader = spark.readStream.schema(RAW_SCHEMA)
+    if one_file_per_batch:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    stream = reader.json(str(src)).select(
+        F.timestamp_seconds("event_time").alias("ts"), "user_id"
     )
-    out = discarding_pane_counts(stream)
+    out = op(stream)
     q = (
         out.writeStream.outputMode("append")
         .format("parquet")
@@ -66,6 +82,110 @@ def test_discarding_panes_emit_deltas_and_sum_to_total(spark, tmp_path):
 
     # Beam invariant: discarding panes sum to the accumulating total.
     assert sum(r["pane_count"] for r in all_rows) == 5
+
+    # Restart contract: the stop/restart above continued the window's
+    # pane ordinals from checkpointed state (0 then 1, not 0 twice), and
+    # the sink's per-window totals equal an uninterrupted drain of both
+    # files.
+    assert sorted(r["pane_index"] for r in all_rows) == [0, 1]
+    src2 = tmp_path / "src2"
+    src2.mkdir()
+    for name in ("b0.json", "b1.json"):
+        (src2 / name).write_text((src / name).read_text())
+    uninterrupted = _run(spark, src2, tmp_path / "ckpt2", tmp_path / "sink2")
+
+    def totals(rows):
+        agg = {}
+        for r in rows:
+            key = (r["window_start"], r["user_id"])
+            agg[key] = agg.get(key, 0) + r["pane_count"]
+        return agg
+
+    assert totals(all_rows) == totals(uninterrupted.collect())
+
+
+def test_pane_ordinals_across_real_microbatches(spark, tmp_path):
+    """Firings in SEPARATE micro-batches of one drain (one file per
+    trigger): window 00:00 fires for user 7 in batches 0 and 1 and for
+    user 9 in batches 1 and 2 with rising ordinals, and a second window
+    opens for user 7 in batch 2, after the first window's idle timer was
+    re-armed."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_ordered(src, [
+        ("b0.json", [
+            {"event_time": BASE_EPOCH + i, "user_id": 7} for i in range(3)
+        ]),
+        ("b1.json", [
+            {"event_time": BASE_EPOCH + 10 + i, "user_id": 7}
+            for i in range(2)
+        ] + [
+            {"event_time": BASE_EPOCH + 5, "user_id": 9}
+        ]),
+        ("b2.json", [
+            {"event_time": BASE_EPOCH + 60, "user_id": 7},
+            {"event_time": BASE_EPOCH + 11, "user_id": 9},
+        ]),
+    ])
+    out = _run(
+        spark, src, tmp_path / "ckpt", tmp_path / "sink",
+        one_file_per_batch=True,
+    )
+    rows = sorted(
+        (r["window_start"].isoformat(), r["user_id"], r["pane_count"],
+         r["pane_index"])
+        for r in out.collect()
+    )
+    assert rows == [
+        ("2024-01-01T00:00:00", 7, 2, 1),
+        ("2024-01-01T00:00:00", 7, 3, 0),
+        ("2024-01-01T00:00:00", 9, 1, 0),
+        ("2024-01-01T00:00:00", 9, 1, 1),
+        ("2024-01-01T00:01:00", 7, 1, 0),
+    ]
+
+
+def test_panes_fire_below_watermark_with_realistic_delay(spark, tmp_path):
+    """Pane emissions legitimately carry window/session starts older than
+    the current watermark (a straddling fixed window; a session extended
+    near its end); Beam panes are not late rows. With a realistic
+    2-minute delay, once the watermark has passed the fired start, both
+    pane shapes must still drain and emit every row."""
+    # Session: one session from 0 s with a 3-minute gap. After b0 the
+    # watermark is 170 s - 120 s = 50 s; b1's event at 175 s extends the
+    # session and fires a pane whose start (0 s) is below the watermark.
+    src = tmp_path / "src_s"
+    src.mkdir()
+
+    def sessions(stream):
+        return discarding_pane_aggregate(
+            stream, key_cols=["user_id"], agg="count",
+            session_gap="3 minutes", watermark_delay="2 minutes",
+        )
+
+    _write(src, "b0.json", [
+        {"event_time": BASE_EPOCH + 0, "user_id": 7},
+        {"event_time": BASE_EPOCH + 170, "user_id": 7},
+    ])
+    _run(spark, src, tmp_path / "ck_s", tmp_path / "out_s", op=sessions)
+    _write(src, "b1.json", [{"event_time": BASE_EPOCH + 175, "user_id": 7}])
+    out = _run(spark, src, tmp_path / "ck_s", tmp_path / "out_s", op=sessions)
+    assert sorted((r["pane_count"], r["pane_index"]) for r in out.collect()) == [
+        (1, 1), (2, 0),
+    ]
+
+    # Fixed: after b0 the watermark is 200 s - 120 s = 80 s; b1's event at
+    # 90 s fires window [60 s, 120 s), whose start is below the watermark.
+    src = tmp_path / "src_f"
+    src.mkdir()
+    _write(src, "b0.json", [
+        {"event_time": BASE_EPOCH + 0, "user_id": 7},
+        {"event_time": BASE_EPOCH + 200, "user_id": 7},
+    ])
+    _run(spark, src, tmp_path / "ck_f", tmp_path / "out_f")
+    _write(src, "b1.json", [{"event_time": BASE_EPOCH + 90, "user_id": 7}])
+    out = _run(spark, src, tmp_path / "ck_f", tmp_path / "out_f")
+    assert sum(r["pane_count"] for r in out.collect()) == 3
 
 
 def test_single_run_panes_equal_totals(spark, tmp_path):
@@ -264,16 +384,16 @@ def test_emit_pane_null_window_dropped_null_key_passes_through():
 
 
 def test_count_panes_differential_vs_groupby_reference():
-    """Property check: _count_panes must agree with the pre-vectorization
-    groupby(sort=True) reference on randomized inputs — window sets with
-    duplicates, NaT holes, arbitrary order, any pandas datetime unit, and
-    arbitrary pre-existing pane-index state."""
+    """Property check: the count form of _agg_panes must agree with the
+    pre-vectorization groupby(sort=True) reference on randomized inputs —
+    window sets with duplicates, NaT holes, arbitrary order, any pandas
+    datetime unit, and arbitrary pre-existing pane-index state."""
     import numpy as np
     import pandas as pd
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from tutorial_apache_beam_spark.streaming.stateful import _count_panes
+    from tutorial_apache_beam_spark.streaming.stateful import _agg_panes
 
     base_ms = int(pd.Timestamp("2024-01-01").value // 1_000_000)
 
@@ -318,7 +438,7 @@ def test_count_panes_differential_vs_groupby_reference():
         state_a = {base_ms + m * 60_000: i for m, i in state_idx.items()}
         state_b = dict(state_a)
 
-        got = _count_panes(pdf, state_a, 7)
+        got = _agg_panes(pdf, state_a, (7,), (("user_id", "int"),), agg="count")
         want = reference(pdf, state_b, 7)
 
         assert [pd.Timestamp(t) for t in got["window_start"]] == want["window_start"]

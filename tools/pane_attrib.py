@@ -24,12 +24,18 @@ Pass spark confs as KEY=VALUE args to test a knob in a fresh JVM, e.g.:
     python tools/pane_attrib.py spark.sql.execution.arrow.maxRecordsPerBatch=100000
 
 Findings recorded in SCALING.md "Pane operator wall, attributed".
+
+`pane_key_curve_section` is the operator's KEY-COUNT curve: the same
+200k-event synthetic drain at 500 to 30k distinct keys, recorded by
+bench.py as `pane_key_curve`.
 """
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -135,6 +141,97 @@ def _variants():
         "full_no_output": full_no_output,
         "full": full,
     }
+
+
+CURVE_EPOCH = 1704067200
+
+
+def _gen_curve_source(src_dir: str, n_events: int, n_users: int, n_files: int = 4):
+    per = n_events // n_files
+    for f in range(n_files):
+        with open(os.path.join(src_dir, f"b{f}.json"), "w") as fh:
+            for i in range(per):
+                e = f * per + i
+                fh.write(
+                    json.dumps(
+                        {
+                            # ~6 windows of data, out-of-order within files
+                            "event_time": CURVE_EPOCH + (e * 7919) % 360,
+                            "user_id": e % n_users,
+                        }
+                    )
+                    + "\n"
+                )
+
+
+def _curve_drain(spark, src: str, work: str) -> int:
+    from pyspark.sql import functions as F
+
+    from tutorial_apache_beam_spark.streaming.stateful import (
+        discarding_pane_counts,
+    )
+
+    ckpt, sink = os.path.join(work, "ck"), os.path.join(work, "out")
+    stream = (
+        spark.readStream.schema("event_time BIGINT, user_id BIGINT")
+        .json(src)
+        .select(F.timestamp_seconds("event_time").alias("ts"), "user_id")
+    )
+    q = (
+        discarding_pane_counts(stream)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.read.parquet(sink).count()
+
+
+def pane_key_curve_section(
+    spark,
+    events: int = 200_000,
+    key_counts: tuple[int, ...] = (500, 1500, 5000, 15000, 30000),
+    runs: int = 1,
+) -> dict:
+    """Wall of one availableNow pane drain (file source, parquet sink)
+    at a fixed event volume and rising distinct-key counts: the pane
+    emitter pays a Python invocation per key per micro-batch, so its
+    wall tracks key count, not event volume.
+
+    Each point first runs an untimed 1/10-size drain, so the timed
+    numbers are steady state (the first drain of a session absorbs the
+    pandas-UDF warm-up), then reports the min over `runs` timed drains,
+    each on a fresh checkpoint and sink."""
+    work_root = tempfile.mkdtemp(prefix="pane_key_curve_")
+    curve = []
+    try:
+        for users in key_counts:
+            work = os.path.join(work_root, str(users))
+            src, warm_src = os.path.join(work, "src"), os.path.join(work, "warm_src")
+            os.makedirs(src)
+            os.makedirs(warm_src)
+            _gen_curve_source(src, events, users)
+            _gen_curve_source(warm_src, max(events // 10, 1000), users)
+            _curve_drain(spark, warm_src, os.path.join(work, "warm_run"))
+            best, rows = float("inf"), -1
+            for r_i in range(max(runs, 1)):
+                t0 = time.monotonic()
+                rows = _curve_drain(spark, src, os.path.join(work, f"run{r_i}"))
+                best = min(best, time.monotonic() - t0)
+            curve.append(
+                {
+                    "users": users,
+                    "sec": round(best, 2),
+                    "out_rows": rows,
+                    "events_per_sec": round(events / best),
+                }
+            )
+    finally:
+        shutil.rmtree(work_root, ignore_errors=True)
+    return {"events": events, "curve": curve}
 
 
 def main() -> None:

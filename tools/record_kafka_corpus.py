@@ -7,11 +7,10 @@ value BINARY) bytes `to_kafka_wire` hands Spark's kafka sink for both
 demo schemas — Demo1/Demo2's InputMessage input payload
 (`{event_time, user_id, click}`, reference utils/message_publisher.py:
 23-119 and entity/InputMessage.java:8-37) and the Demo2 windowed-count
-output shape. Same pattern as tools/record_protoshim_corpus.py: record
-once, commit, and replay on every test run so any wire-encode
-regression (field order, casting, key derivation, JSON formatting)
-fails loudly in a unit test instead of surfacing as consumer breakage
-against a real topic.
+output shape. Record once, commit, and replay on every test run so any
+wire-encode regression (field order, casting, key derivation, JSON
+formatting) fails loudly in a unit test instead of surfacing as consumer
+breakage against a real topic.
 
 Corpus: tests/data/kafka_wire_corpus.jsonl — one line per message:
 

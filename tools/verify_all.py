@@ -44,7 +44,7 @@ PUBLIC_HOSTS = (
     "pypi.org", "duckdb.org", "pandas.pydata.org", "numpy.org",
     "arrow.apache.org", "spark.apache.org", "beam.apache.org",
     "avro.apache.org", "w3.org", "ietf.org", "wikipedia.org",
-    "localhost", "example.com", "protobuf.dev", "grpc.io",
+    "localhost", "example.com",
     "cloud.google.com", "terraform.io", "json.org", "unicode.org",
     # Synthetic fixture domains used by the PII-redaction tests/docs —
     # single-letter placeholders, not real services.
@@ -53,16 +53,14 @@ PUBLIC_HOSTS = (
 ENV_PREFIXES = (
     "SPARK_", "PYSPARK_", "JAVA_", "PYTHON", "HADOOP_", "TZ",
     # repo-local tool knobs (documented where read)
-    "SIM_", "PANE_", "PROTOSHIM_",
+    "SIM_", "PANE_",
 )
 ALLOWED_IMPORTS = {
     # baked-in third-party surface; everything else must be stdlib,
     # package-internal, or import-try gated.
     "pyspark", "pandas", "numpy", "pyarrow", "duckdb", "pytest",
-    "hypothesis", "tutorial_apache_beam_spark", "vendor", "tests",
+    "hypothesis", "tutorial_apache_beam_spark", "tests",
     "tools", "bench", "__spark_entry__", "demo1", "demo2",
-    # public namespace the vendored clean-room protoshim provides
-    "google",
     # import-try-gated optional codecs/decoders (absent in this image)
     "PIL", "snappy", "zstandard",
 }
@@ -85,10 +83,8 @@ LEAK_PATTERNS = [
     ("bucket-scheme", re.compile(
         r"\b(?:s3a?|gs|wasbs?|abfss?)://(?!bucket\b)[\w.-]+"
     )),
-    # '.internal' is deliberately absent: google.protobuf.internal is a
-    # public Python module path the vendored shim must reference.
     ("internal-host", re.compile(
-        r"\b[\w.-]+\.(?:corp|intranet)\b"
+        r"\b[\w.-]+\.(?:corp|intranet|internal)\b"
     )),
     ("credential", re.compile(
         r"(?i)\b(?:aws_secret|api[_-]?key|access[_-]?token|password)\s*=\s*['\"][^'\"]{8,}"
@@ -100,7 +96,7 @@ ENV_RE = re.compile(r"(?:os\.environ(?:\.get)?[\[(]|getenv\()\s*['\"]([A-Z][A-Z0
 
 def _py_sources() -> list[str]:
     out = []
-    for base in ("tutorial_apache_beam_spark", "tools", "tests", "vendor", "."):
+    for base in ("tutorial_apache_beam_spark", "tools", "tests", "."):
         d = os.path.join(REPO, base)
         if base == ".":
             out += [

@@ -571,8 +571,7 @@ def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
       emit (discarding panes fire per touched session per batch, not at
       watermark close, which is exactly what distinguishes the two
       branches' oracles). Multi-firing deltas, cross-batch merges, and
-      backward start extension: tests/test_session_panes.py + the tws
-      parity test.
+      backward start extension: tests/test_session_panes.py.
     """
     from tutorial_apache_beam_spark.streaming.stateful import (
         discarding_pane_aggregate,

@@ -44,16 +44,6 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             f"{repo_root}{os.pathsep}{existing}" if existing else repo_root
         )
-    # Same before-the-JVM constraint for the protobuf runtime: the
-    # state-v2 (transformWithState) "driver worker" is a separate Python
-    # process that gets NO addPyFile includes — only the JVM's inherited
-    # PYTHONPATH reaches it, so the vendored shim must be on it now.
-    from tutorial_apache_beam_spark.protoshim import ensure_protobuf_runtime
-
-    try:
-        ensure_protobuf_runtime()
-    except ImportError:  # pragma: no cover - vendored shim always imports
-        pass
 
     cpus = DEFAULT_CPUS
     builder = (

@@ -47,11 +47,10 @@ silently diverge from spark-avro).
 
 Clean-room provenance: implemented from the public Apache Avro 1.11
 specification only (binary encoding §"Binary Encoding", container format
-§"Object Container Files") — the same provenance discipline as the
-vendored protoshim. The spec's own worked encoding examples are pinned in
-tests/test_avro_fallback.py (zigzag longs: 0→00, -1→01, 1→02, -2→03,
-2→04; string "foo" → 06 66 6f 6f), so the primitives are verified against
-the SPEC, not against this module's reader.
+§"Object Container Files"). The spec's own worked encoding examples are
+pinned in tests/test_avro_fallback.py (zigzag longs: 0→00, -1→01, 1→02,
+-2→03, 2→04; string "foo" → 06 66 6f 6f), so the primitives are verified
+against the SPEC, not against this module's reader.
 
 Scale/behavior notes:
 - The WRITE path is distributed: one container file per DataFrame

@@ -178,7 +178,7 @@ def publish_kafka(
     """Publish a streaming DataFrame to a kafka topic (at-least-once:
     kafka's producer has no idempotent-sink integration in Spark, so
     retried micro-batches can re-send — consumers dedup by content key,
-    e.g. `streaming.tws.tws_ingest_dedup`). Returns the started query.
+    e.g. `dropDuplicatesWithinWatermark`). Returns the started query.
 
     Requires the spark-sql-kafka package on the classpath; the plan
     construction itself (wire encode + option wiring) is

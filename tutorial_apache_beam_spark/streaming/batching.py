@@ -11,12 +11,8 @@ batched-RPC / batched-model-inference stages in a training-data pipeline
 Spark-first expression: `applyInPandasWithState` with one buffer + sequence
 counter per key in the state store and an event-time timeout that flushes
 the remainder once the watermark passes the buffered data — exactly Beam's
-state/timer implementation, on Spark's state store. (Spark 4's
-`transformWithStateInPandas` is the successor API for this operator —
-ListState instead of a buffer-in-one-row, explicit timers; the engine
-ships that form too as `streaming.tws.tws_group_into_batches`, with
-output parity asserted in tests/test_tws_panes.py. This v1 form remains
-the default because it runs on every state-store provider.)
+state/timer implementation, on Spark's state store (any state-store
+provider).
 
 Scale notes: state per key is the ≤ n pending element ids, cleared on every
 full batch, sharded across the cluster by the grouping key like any

@@ -189,19 +189,14 @@ def demo2_panes_pipeline(
     window: str = "1 minute",
     allowed_skew: str = "1 minute",
     allowed_lateness: str = "1 minute",
-    stateful_api: str = "v1",
     available_now: bool = True,
 ) -> PipelineResult:
     """Demo2 with Beam's `.discardingFiredPanes()` semantics
     (Demo2.java:151-157: repeated trigger, each firing emits only the
     delta since the previous pane): one row per (window, user, firing)
-    with the firing ordinal, instead of one final row per window.
-
-    `stateful_api` picks the implementation: "v1" =
-    applyInPandasWithState (runs on every state-store provider), "v2" =
-    transformWithStateInPandas (typed state + explicit timers; switches
-    the SESSION's state-store provider to RocksDB — the provider that
-    API requires — for queries started after this call).
+    with the firing ordinal, instead of one final row per window, from
+    the applyInPandasWithState pane emitter (runs on every state-store
+    provider).
 
     Beam's skew and lateness compose into one watermark delay here
     exactly as in `demo2_pipeline`.
@@ -209,20 +204,8 @@ def demo2_panes_pipeline(
     from tutorial_apache_beam_spark.streaming.stateful import (
         discarding_pane_counts,
     )
-    from tutorial_apache_beam_spark.streaming.tws import tws_pane_counts
 
     delay = f"{_total_delay(allowed_skew, allowed_lateness)} seconds"
-    if stateful_api == "v1":
-        op = discarding_pane_counts
-    elif stateful_api == "v2":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        op = tws_pane_counts
-    else:
-        raise ValueError(f"unknown stateful_api: {stateful_api!r}")
 
     p = Pipeline(spark)
     (
@@ -231,7 +214,7 @@ def demo2_panes_pipeline(
         .apply(
             "DiscardingPaneCounts",
             MapElements(
-                lambda df: op(
+                lambda df: discarding_pane_counts(
                     df,
                     ts_col="event_time",
                     window_duration=window,

@@ -185,9 +185,8 @@ def _agg_panes(
     value_name: str = "pane_count",
 ) -> pd.DataFrame:
     """Aggregate a micro-batch's rows per window and assign pane indexes —
-    the SHARED hot-path body of both pane emitters (this module's
-    applyInPandasWithState form and streaming/tws's transformWithState
-    twin), which runs once per key per micro-batch.
+    the hot-path body of the fixed/sliding-window pane emitter
+    (`_make_pane_emitter`), which runs once per key per micro-batch.
 
     Aggregates on the int64-epoch view with np.unique + ufunc.reduceat
     instead of a pandas groupby (~4x less per-call time, measured on the
@@ -266,17 +265,6 @@ def _agg_panes(
     )
 
 
-def _count_panes(
-    pdf: pd.DataFrame, open_windows: dict, user_id
-) -> pd.DataFrame:
-    """Count-combiner view of `_agg_panes` with the historical single-key
-    contract (columns window_start/user_id/pane_count/pane_index) — the
-    body the tws state-v2 twin and the differential tests share."""
-    return _agg_panes(
-        pdf, open_windows, (user_id,), (("user_id", "int"),), agg="count"
-    )
-
-
 def _pane_frame(
     starts_us,
     values,
@@ -330,12 +318,11 @@ def _session_panes(
     gap_us: int,
     ts_col: str,
 ) -> pd.DataFrame:
-    """Session-window twin of `_agg_panes` — the SHARED body of both
-    session-pane emitters (v1 applyInPandasWithState and the tws
-    state-v2 twin), run once per key per micro-batch. All interval
-    arithmetic is in epoch MICROSECONDS (Spark timestamp precision —
-    session starts are raw event times, so a coarser view would
-    truncate `window_start`).
+    """Session-window counterpart of `_agg_panes` — the body of the
+    session-pane emitter (`_make_session_pane_emitter`), run once per key
+    per micro-batch. All interval arithmetic is in epoch MICROSECONDS
+    (Spark timestamp precision — session starts are raw event times, so
+    a coarser view would truncate `window_start`).
 
     `sessions` is the key's open-session list, each entry
     [start_us, end_us, next_pane_idx] — MUTATED in place to the merged
@@ -465,7 +452,7 @@ def _make_session_pane_emitter(
     value_name: str,
     ts_col: str,
 ):
-    """Per-KEY session-pane emitter (v1 API): open-session intervals +
+    """Per-KEY session-pane emitter: open-session intervals +
     pane ordinals in three parallel array columns (epoch µs); inline
     pruning of sessions the watermark closed; ONE re-armed event-time
     timer per key at the newest session end for idle-key cleanup — the
