@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import sys
 
 import duckdb
@@ -37,6 +38,18 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     yield con
     con.close()
+
+
+# Logical plan nodes that run Python workers.
+_PYTHON_NODE = re.compile(r"\b\w*(?:InPandas|InArrow|EvalPython)\w*")
+
+
+def python_plan_nodes(df):
+    """Names of the Python-worker nodes in `df`'s analyzed plan, in plan
+    order (a streaming frame cannot be optimized before it starts)."""
+    return _PYTHON_NODE.findall(
+        df._jdf.queryExecution().analyzed().toString()
+    )
 
 
 def _norm(v):

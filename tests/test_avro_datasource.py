@@ -472,6 +472,50 @@ def test_streaming_sink_commit_sweep_is_marker_gated(registered, tmp_path):
     assert back.count() == 2
 
 
+def test_commit_warns_once_when_dir_fsync_fails(tmp_path, monkeypatch):
+    """The commit marker's directory fsync is best effort, but a failure
+    is visible: with directory opens refused, two commits still complete
+    and the process warns exactly once."""
+    import warnings
+
+    from pyspark.sql import Row
+
+    from tutorial_apache_beam_spark.sources import avro_datasource
+    from tutorial_apache_beam_spark.sources.avro_fallback import (
+        _field_plan,
+        spark_schema_to_avro,
+    )
+
+    schema = T.StructType([T.StructField("id", T.LongType(), False)])
+    target = str(tmp_path / "tree")
+    os.makedirs(target)
+    w = avro_datasource.AvroFallbackStreamWriter(
+        local=target, pcols=[], names=["id"], plan=_field_plan(schema),
+        avro_schema=spark_schema_to_avro(schema), codec="null",
+    )
+    real_open = os.open
+
+    def refuse_dir(path, flags, *args, **kwargs):
+        if os.fspath(path) == target:
+            raise OSError(22, "directory open refused")
+        return real_open(path, flags, *args, **kwargs)
+
+    monkeypatch.setattr(avro_datasource, "_DIR_FSYNC_WARNED", False)
+    monkeypatch.setattr(os, "open", refuse_dir)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        for batch_id in (0, 1):
+            msg = w.write(iter([Row(id=batch_id)]))
+            w.commit([msg], batchId=batch_id)
+    fsync_warnings = [c for c in caught if "fsync directory" in str(c.message)]
+    assert len(fsync_warnings) == 1
+    assert sorted(
+        os.path.basename(p).split("-")[0]
+        for p in glob.glob(f"{target}/bid*.avro")
+    ) == ["bid0", "bid1"]
+    assert open(os.path.join(target, ".avro_stream_last_bid")).read() == "1"
+
+
 def test_stream_late_partition_value_typing(spark, tmp_path):
     """A late file in a NEW directory of the fixed partition column uses
     the types fixed at stream start; a value that no longer fits refuses

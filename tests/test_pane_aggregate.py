@@ -263,8 +263,8 @@ def test_nan_treated_as_missing_on_both_paths(spark, tmp_path):
 
 
 def test_accumulating_schema_matches_discarding(spark, tmp_path):
-    """mode='auto' must not be able to change the output schema with the
-    cardinality hint: both paths agree on names AND types per combiner."""
+    """Switching the pane mode changes the values, never the output
+    schema: both paths agree on names AND types per combiner."""
     src = tmp_path / "src"
     src.mkdir()
     _write(src, "b0.json", [
@@ -408,15 +408,14 @@ def test_agg_panes_all_null_value_window_emits_nothing():
     assert len(out) == 0 and state == {}
 
 
-def test_map_side_preaggregation_equivalence(spark, tmp_path):
-    """r14 (VERDICT r13 item 3): count/sum discarding panes shuffle
-    (window, keys, partial) instead of raw rows. Pin the equivalence on
-    the awkward inputs — multi-partition source (several partials per
-    (window, key) group summed by the emitter), null-valued rows inside
-    a live group (ignored), an all-null-value group (emits nothing), a
-    null string key (its own group), and a second firing (pane_index
-    bookkeeping over partials).  Expected values are computed by hand
-    from the raw rows, i.e. the raw path's contract."""
+def test_raw_path_contract_on_repartitioned_batch(spark, tmp_path):
+    """Count/sum discarding panes over a batch split across
+    `repartition(3)`, on the awkward inputs: several source partitions
+    feeding one (window, key) group, null-valued rows inside a live
+    group (ignored), an all-null-value group (emits nothing), a null
+    string key (its own group), and a second firing (pane_index
+    continues). Expected values are computed by hand from the raw rows,
+    i.e. the raw path's contract."""
     src = tmp_path / "src"
     src.mkdir()
     _write(src, "b0.json", [
@@ -437,8 +436,8 @@ def test_map_side_preaggregation_equivalence(spark, tmp_path):
     ])
 
     def run(agg, value_col, ckpt, sink):
-        # repartition(3) forces several map partitions so the emitter
-        # really combines partials, not one pre-reduced row.
+        # repartition(3) spreads one (window, key) group's rows over
+        # several map partitions ahead of the keyed exchange.
         out = discarding_pane_aggregate(
             _stream(spark, src).repartition(3),
             key_cols=["user_id", "device"],
@@ -459,14 +458,14 @@ def test_map_side_preaggregation_equivalence(spark, tmp_path):
         (r["user_id"], r["device"]): (r["pane_count"], r["pane_index"])
         for r in run("count", None, "ckpt_c", "sink_c").collect()
     }
-    # count counts ROWS (null-valued rows too) — unchanged by pre-agg.
+    # count counts ROWS (null-valued rows too).
     assert counts == {
         (1, "m"): (3, 0),
         (2, "web"): (1, 0),
         (3, None): (2, 0),
     }
 
-    # Second firing: pane ordinals advance over partials like raw rows.
+    # Second firing: the group's pane ordinal advances to 1.
     _write(src, "b1.json", [
         {"event_time": BASE_EPOCH + 6, "user_id": 1, "points": 4,
          "device": "m"},

@@ -1,61 +1,26 @@
-"""Pane-path auto-selection by measured key-cardinality cost model
-(VERDICT r8 #5): `mode="auto"` takes the applyInPandasWithState fidelity
-path only while its per-key Python floor (~0.26 ms x keys x micro-batches,
-tools/pane_attrib.py) is trigger-interval noise, and the JVM incremental
-aggregation — Demo2's operator, the 100-TB default — past the threshold
-or when no cardinality hint exists. Asking for 'discarding' above the
-threshold stays honored but WARNS with the measured curve."""
+"""Explicit pane modes: `discarding` (per-firing deltas with pane
+ordinals, the keyed Python state operator) and `accumulating`
+(accumulated values with NULL ordinals, the JVM streaming aggregation)
+are chosen by the caller for their meaning — at the operator layer by
+calling `discarding_pane_aggregate` or `accumulating_pane_aggregate`,
+in the Pipeline API by `WindowInto(accumulation=...)`. The plan shape
+each mode builds is pinned here."""
 
 from __future__ import annotations
 
 import json
-import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import python_plan_nodes
 from tutorial_apache_beam_spark.streaming.stateful import (
-    AUTO_KEY_THRESHOLD,
-    accumulating_pane_counts,
-    pane_counts,
-    select_pane_impl,
+    accumulating_pane_aggregate,
+    discarding_pane_aggregate,
 )
 
 BASE_EPOCH = 1704067230  # 2024-01-01 00:00:30 UTC
 RAW_SCHEMA = "event_time BIGINT, user_id BIGINT"
-
-
-def test_selector_choice_at_both_cardinalities():
-    # Low cardinality: fidelity is ~0.4 s/micro-batch at the threshold —
-    # auto buys it.
-    assert select_pane_impl("auto", expected_keys=1_500) == "discarding"
-    assert select_pane_impl("auto", expected_keys=AUTO_KEY_THRESHOLD) == "discarding"
-    # High cardinality: the measured per-key floor dominates (15k keys =
-    # +3.95 s emitter compute per drain, 150k = 34x wall) — JVM path.
-    assert (
-        select_pane_impl("auto", expected_keys=AUTO_KEY_THRESHOLD + 1)
-        == "accumulating"
-    )
-    assert select_pane_impl("auto", expected_keys=150_000) == "accumulating"
-    # No hint: an unbounded stream's cardinality is unknowable at plan
-    # time — auto must take the scale-safe path, never the per-key one.
-    assert select_pane_impl("auto") == "accumulating"
-
-
-def test_explicit_modes_honored_and_priced():
-    assert select_pane_impl("accumulating", expected_keys=10) == "accumulating"
-    # Explicit fidelity above the threshold is honored but warns with the
-    # measured cost model, quoting keys and projected per-batch seconds.
-    with pytest.warns(UserWarning, match="per key per micro-batch") as rec:
-        assert select_pane_impl("discarding", expected_keys=150_000) == "discarding"
-    msg = str(rec[0].message)
-    assert "150,000" in msg and "mode='accumulating'" in msg
-    # Below the threshold fidelity is free — no warning.
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        assert select_pane_impl("discarding", expected_keys=100) == "discarding"
-    with pytest.raises(ValueError, match="unknown pane mode"):
-        select_pane_impl("bogus")
 
 
 def _stream(spark, src):
@@ -66,26 +31,28 @@ def _stream(spark, src):
     )
 
 
-def test_auto_plan_switches_operator(spark, tmp_path):
-    """The selector's choice must show in the PLAN: auto/low builds the
-    Python stateful operator, auto/high and auto/no-hint build the JVM
-    streaming aggregation with no Python node."""
+@pytest.mark.parametrize("agg", ["count", "sum", "min", "max", "mean"])
+def test_explicit_mode_plan_operator(spark, tmp_path, agg):
+    """Each mode shows in the PLAN, for every combiner: discarding holds
+    exactly one Python operator — the keyed state operator, with no
+    MapInPandas stage in front of it — and accumulating is the JVM
+    streaming aggregation with no Python node at all."""
     src = tmp_path / "src"
     src.mkdir()
     (src / "b0.json").write_text(
         json.dumps({"event_time": BASE_EPOCH, "user_id": 7}) + "\n"
     )
-    stream = _stream(spark, src)
+    stream = _stream(spark, src).withColumn(
+        "points", (F.col("user_id") * 3).cast("bigint")
+    )
+    value_col = None if agg == "count" else "points"
 
-    low = pane_counts(stream, mode="auto", expected_keys=1_000)
-    low_plan = low._jdf.queryExecution().analyzed().toString()
-    assert "FlatMapGroupsInPandasWithState" in low_plan
+    disc = discarding_pane_aggregate(stream, agg=agg, value_col=value_col)
+    assert python_plan_nodes(disc) == ["FlatMapGroupsInPandasWithState"]
 
-    for kwargs in ({"expected_keys": 10**6}, {}):
-        high = pane_counts(stream, mode="auto", **kwargs)
-        high_plan = high._jdf.queryExecution().analyzed().toString()
-        assert "FlatMapGroupsInPandasWithState" not in high_plan
-        assert "Aggregate" in high_plan
+    acc = accumulating_pane_aggregate(stream, agg=agg, value_col=value_col)
+    assert python_plan_nodes(acc) == []
+    assert "Aggregate" in acc._jdf.queryExecution().analyzed().toString()
 
 
 def test_accumulating_path_update_mode_semantics(spark, tmp_path):
@@ -117,7 +84,7 @@ def test_accumulating_path_update_mode_semantics(spark, tmp_path):
     )
     sink = f"pane_acc_{tmp_path.name}"
     q = (
-        accumulating_pane_counts(stream)
+        accumulating_pane_aggregate(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName(sink)
@@ -139,10 +106,11 @@ def test_accumulating_path_update_mode_semantics(spark, tmp_path):
 
 def test_pipeline_api_routes_through_selector(spark, tmp_path):
     """r10 (VERDICT r9 item 5): the Beam-facing path — WindowInto(...,
-    accumulation=...) + Count.per_key — makes the SAME priced choice as
-    the operator layer: auto/low-cardinality builds the Python stateful
-    pane operator, auto/high (and auto with no hint) builds the JVM
-    streaming aggregation; None keeps the final-result mapping."""
+    accumulation=...) + Count.per_key — builds the operator its mode
+    names: 'discarding' the Python keyed state operator, 'accumulating'
+    the JVM streaming aggregation with no Python node; None keeps the
+    final-result mapping; any other value is refused when WindowInto
+    is constructed."""
     from tutorial_apache_beam_spark.plans.pipeline import (
         Count,
         FixedWindows,
@@ -158,7 +126,7 @@ def test_pipeline_api_routes_through_selector(spark, tmp_path):
     )
     p = Pipeline(spark)
 
-    def build(accumulation, expected_keys=None):
+    def build(accumulation):
         return (
             p.create(_stream(spark, src))
             .apply("Ts", WithTimestamps("ts"))
@@ -168,31 +136,25 @@ def test_pipeline_api_routes_through_selector(spark, tmp_path):
                     FixedWindows("1 minute"),
                     allowed_lateness="2 minutes",
                     accumulation=accumulation,
-                    expected_keys=expected_keys,
                 ),
             )
             .apply("Count", Count.per_key("user_id"))
         )
 
-    plan_low = (
-        build("auto", 1_000).df._jdf.queryExecution().analyzed().toString()
-    )
-    assert "FlatMapGroupsInPandasWithState" in plan_low
-
-    for kwargs in ({"expected_keys": 10**6}, {}):
-        plan_high = (
-            build("auto", **kwargs)
-            .df._jdf.queryExecution()
-            .analyzed()
-            .toString()
-        )
-        assert "FlatMapGroupsInPandasWithState" not in plan_high
-        assert "Aggregate" in plan_high
-        # pane contract holds on the JVM path too
-        high = build("auto", **kwargs).df
-        assert set(high.columns) == {
+    disc = build("discarding").df
+    assert python_plan_nodes(disc) == ["FlatMapGroupsInPandasWithState"]
+    acc = build("accumulating").df
+    assert python_plan_nodes(acc) == []
+    assert "Aggregate" in acc._jdf.queryExecution().analyzed().toString()
+    # the pane contract holds on both paths
+    for df in (disc, acc):
+        assert set(df.columns) == {
             "window_start", "user_id", "pane_count", "pane_index",
         }
+
+    for bad in ("auto", "bogus"):
+        with pytest.raises(ValueError, match="unknown pane accumulation"):
+            WindowInto(FixedWindows("1 minute"), accumulation=bad)
 
     # accumulation=None keeps the classic final-count mapping.
     final = build(None).df
@@ -239,7 +201,7 @@ def test_pipeline_api_routes_through_selector(spark, tmp_path):
         "window_start", "user_id", "device", "pane_count", "pane_index",
     }
     # Sessions compose with pane accumulation since r12 (the refusal is
-    # narrowed to nothing): 'auto' with no key hint takes the JVM
+    # narrowed to nothing): 'accumulating' takes the JVM
     # merging-session aggregation, same as the other window fns.
     from tutorial_apache_beam_spark.plans.pipeline import Sessions
 
@@ -248,20 +210,20 @@ def test_pipeline_api_routes_through_selector(spark, tmp_path):
         .apply("Ts", WithTimestamps("ts"))
         .apply(
             "Win",
-            WindowInto(Sessions("1 minute"), accumulation="auto"),
+            WindowInto(Sessions("1 minute"), accumulation="accumulating"),
         )
         .apply("Count", Count.per_key("user_id"))
     )
+    assert python_plan_nodes(sess.df) == []
     plan = sess.df._jdf.queryExecution().analyzed().toString()
     assert "sessionwindow" in plan.lower().replace("_", "")
 
 
 def test_pane_key_contract_name_and_type(spark, tmp_path):
     """r10 review: (a) both pane paths emit the CALLER's key name, so
-    mode='auto' can't change the output schema with the cardinality
-    hint; (b) non-integral keys refuse at PLAN time on the discarding
-    path (its state schema pins BIGINT — a string key used to crash
-    deep in the executor) with the accumulating remediation."""
+    switching modes can't change the output schema; (b) keys other than
+    integral or string refuse at PLAN time on the discarding path (its
+    state key construction pins those); (c) reserved key names refuse."""
     import json as _json
 
     src = tmp_path / "src"
@@ -284,32 +246,27 @@ def test_pane_key_contract_name_and_type(spark, tmp_path):
         )
     )
     # (a) caller's key name on BOTH paths
-    for mode, keys in (("discarding", 10), ("accumulating", 10**6)):
-        df = pane_counts(
-            stream, key_col="device_id", mode=mode, expected_keys=keys
-        )
+    for pane_fn in (discarding_pane_aggregate, accumulating_pane_aggregate):
+        df = pane_fn(stream, key_cols=["device_id"])
         assert set(df.columns) == {
             "window_start", "device_id", "pane_count", "pane_index",
-        }, mode
+        }, pane_fn.__name__
     # (b) r11: string keys build real plans on BOTH paths (the general
     # emitter constructs typed key cells; r10's BIGINT-only restriction
     # is lifted); non-(integral|string) keys refuse at plan time.
-    disc = pane_counts(stream, key_col="word", mode="discarding",
-                       expected_keys=10)
+    disc = discarding_pane_aggregate(stream, key_cols=["word"])
     assert "word" in disc.columns
-    acc = pane_counts(stream, key_col="word", mode="accumulating")
+    acc = accumulating_pane_aggregate(stream, key_cols=["word"])
     assert "word" in acc.columns
     with pytest.raises(ValueError, match="integral or string"):
-        pane_counts(
-            stream.withColumn("tskey", F.col("ts")),
-            key_col="tskey", mode="discarding", expected_keys=10,
+        discarding_pane_aggregate(
+            stream.withColumn("tskey", F.col("ts")), key_cols=["tskey"],
         )
     # (c) reserved key names collide with the pane output schema —
     # refused at plan time (ADVICE r10 item 1).
     renamed = stream.withColumnRenamed("device_id", "pane_index")
     with pytest.raises(ValueError, match="collides with a pane"):
-        pane_counts(renamed, key_col="pane_index", mode="discarding",
-                    expected_keys=10)
+        discarding_pane_aggregate(renamed, key_cols=["pane_index"])
 
 
 def test_non_count_combiner_refuses_pane_accumulation(spark, tmp_path):
@@ -338,11 +295,11 @@ def test_non_count_combiner_refuses_pane_accumulation(spark, tmp_path):
         .apply("Ts", WithTimestamps("ts"))
         .apply(
             "Win",
-            WindowInto(FixedWindows("1 minute"), accumulation="auto"),
+            WindowInto(FixedWindows("1 minute"), accumulation="accumulating"),
         )
     )
-    # r11 (VERDICT r10 item 1): Sum/Mean/CombinePerKey route through the
-    # pane selector — per-firing rows, pane_value column.
+    # r11 (VERDICT r10 item 1): Sum/Mean/CombinePerKey route to the
+    # pane operators — per-firing rows, pane_value column.
     from tutorial_apache_beam_spark.plans.pipeline import (
         CombinePerKey,
         GroupByKey,

@@ -143,10 +143,13 @@ def test_pane_deltas_sum_to_totals(firings):
 
     from tutorial_apache_beam_spark.streaming.stateful import (
         _duration_ms,
-        _make_emit_pane,
+        _make_pane_emitter,
     )
 
-    fn = _make_emit_pane(_duration_ms("1 minute"))
+    fn = _make_pane_emitter(
+        _duration_ms("1 minute"), (("user_id", "int"),), "count", None,
+        "int", "pane_count",
+    )
     base = pd.Timestamp("2024-01-01 00:00:00")
     state = _State()
     emitted = []

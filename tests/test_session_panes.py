@@ -22,6 +22,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import python_plan_nodes
 from tutorial_apache_beam_spark.streaming.stateful import (
     _pane_plan,
     _session_panes,
@@ -331,27 +332,25 @@ def test_unit_all_invalid_batch_leaves_state_untouched():
 
 
 def test_pane_aggregate_routes_session_gap_both_modes(spark, tmp_path):
-    """`pane_aggregate(session_gap=...)` routes through the selector:
-    'auto' without a key hint takes the JVM session aggregation (no
-    Python state operator in the plan), 'discarding' takes the keyed
-    interval-state operator."""
-    from tutorial_apache_beam_spark.streaming.stateful import pane_aggregate
-
+    """`session_gap=` on both explicit modes: `accumulating_pane_aggregate`
+    builds the JVM session aggregation with no Python node in the plan,
+    `discarding_pane_aggregate` the keyed interval-state operator as its
+    only Python node."""
     src = tmp_path / "src"
     src.mkdir()
     _write(src, "b0.json", [_ev(0, 7)])
     stream = _stream(spark, src)
 
-    jvm = pane_aggregate(
-        stream, key_cols=["user_id"], agg="count",
-        session_gap="1 minute", mode="auto",
+    def plan(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    jvm = accumulating_pane_aggregate(
+        stream, key_cols=["user_id"], agg="count", session_gap="1 minute",
     )
-    assert "sessionwindow" in jvm._jdf.queryExecution().analyzed().toString() \
-        .lower().replace("_", "")
-    py = pane_aggregate(
-        stream, key_cols=["user_id"], agg="count",
-        session_gap="1 minute", mode="discarding",
+    assert "sessionwindow" in plan(jvm).lower().replace("_", "")
+    assert "Aggregate" in plan(jvm)
+    assert python_plan_nodes(jvm) == []
+    py = discarding_pane_aggregate(
+        stream, key_cols=["user_id"], agg="count", session_gap="1 minute",
     )
-    assert "FlatMapGroupsInPandasWithState" in (
-        py._jdf.queryExecution().analyzed().toString()
-    )
+    assert python_plan_nodes(py) == ["FlatMapGroupsInPandasWithState"]

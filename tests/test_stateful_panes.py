@@ -6,6 +6,7 @@ import json
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from tutorial_apache_beam_spark.streaming.stateful import (
@@ -55,33 +56,59 @@ def _run(spark, src, ckpt, sink, op=discarding_pane_counts, one_file_per_batch=F
     return spark.read.parquet(str(sink))
 
 
-def test_discarding_panes_emit_deltas_and_sum_to_total(spark, tmp_path):
+def _points_panes(agg):
+    """`discarding_pane_aggregate` for `agg` over user_id; sum panes add
+    `points` = seconds past BASE_EPOCH + 1, so each event weighs
+    differently and a wrong delta cannot pass as a count."""
+    if agg == "count":
+        return lambda stream: discarding_pane_aggregate(stream, agg="count")
+    return lambda stream: discarding_pane_aggregate(
+        stream.withColumn(
+            "points", F.unix_timestamp("ts") - BASE_EPOCH + 1
+        ),
+        agg=agg, value_col="points",
+    )
+
+
+@pytest.mark.parametrize(
+    "agg, firing1, firing2",
+    # b0 holds seconds 0-2 (points 1+2+3), b1 seconds 10-11 (11+12).
+    [("count", 3, 2), ("sum", 6, 23)],
+    ids=["count", "sum"],
+)
+def test_discarding_panes_emit_deltas_and_sum_to_total(
+    spark, tmp_path, agg, firing1, firing2
+):
     src = tmp_path / "src"
     src.mkdir()
     ckpt = tmp_path / "ckpt"
-
     sink = tmp_path / "sink"
+    op = _points_panes(agg)
+    vcol = "pane_count" if agg == "count" else "pane_value"
 
     # Firing 1: 3 events for user 7 in window [00:00, 00:01).
     _write(src, "b0.json", [
         {"event_time": BASE_EPOCH + i, "user_id": 7} for i in range(3)
     ])
-    rows1 = [r.asDict() for r in _run(spark, src, ckpt, sink).collect()]
+    rows1 = [r.asDict() for r in _run(spark, src, ckpt, sink, op=op).collect()]
     assert len(rows1) == 1
-    assert rows1[0]["pane_count"] == 3 and rows1[0]["pane_index"] == 0
+    assert rows1[0][vcol] == firing1 and rows1[0]["pane_index"] == 0
 
-    # Firing 2: 2 MORE events in the same window (late but window still
-    # open) → a second pane with only the delta, pane_index 1.
+    # Firing 2 after a stop and restart from the checkpoint: 2 MORE
+    # events in the same window (late but window still open) → a second
+    # pane with only the delta, pane_index 1.
     _write(src, "b1.json", [
         {"event_time": BASE_EPOCH + 10 + i, "user_id": 7} for i in range(2)
     ])
-    all_rows = [r.asDict() for r in _run(spark, src, ckpt, sink).collect()]
+    all_rows = [
+        r.asDict() for r in _run(spark, src, ckpt, sink, op=op).collect()
+    ]
     rows2 = [r for r in all_rows if r["pane_index"] == 1]
     assert len(all_rows) == 2 and len(rows2) == 1
-    assert rows2[0]["pane_count"] == 2
+    assert rows2[0][vcol] == firing2
 
     # Beam invariant: discarding panes sum to the accumulating total.
-    assert sum(r["pane_count"] for r in all_rows) == 5
+    assert sum(r[vcol] for r in all_rows) == firing1 + firing2
 
     # Restart contract: the stop/restart above continued the window's
     # pane ordinals from checkpointed state (0 then 1, not 0 twice), and
@@ -92,14 +119,16 @@ def test_discarding_panes_emit_deltas_and_sum_to_total(spark, tmp_path):
     src2.mkdir()
     for name in ("b0.json", "b1.json"):
         (src2 / name).write_text((src / name).read_text())
-    uninterrupted = _run(spark, src2, tmp_path / "ckpt2", tmp_path / "sink2")
+    uninterrupted = _run(
+        spark, src2, tmp_path / "ckpt2", tmp_path / "sink2", op=op
+    )
 
     def totals(rows):
-        agg = {}
+        acc = {}
         for r in rows:
             key = (r["window_start"], r["user_id"])
-            agg[key] = agg.get(key, 0) + r["pane_count"]
-        return agg
+            acc[key] = acc.get(key, 0) + r[vcol]
+        return acc
 
     assert totals(all_rows) == totals(uninterrupted.collect())
 
@@ -236,10 +265,13 @@ def test_emit_pane_arms_event_time_timer_and_cleans_up():
 
     from tutorial_apache_beam_spark.streaming.stateful import (
         _duration_ms,
-        _make_emit_pane,
+        _make_pane_emitter,
     )
 
-    fn = _make_emit_pane(_duration_ms("1 minute"))
+    fn = _make_pane_emitter(
+        _duration_ms("1 minute"), (("user_id", "int"),), "count", None,
+        "int", "pane_count",
+    )
     w1 = pd.Timestamp("2024-01-01 00:05:00")
     w2 = pd.Timestamp("2024-01-01 00:07:00")
     key = (7,)
@@ -294,10 +326,13 @@ def test_emit_pane_output_contract_vectorized_path():
 
     from tutorial_apache_beam_spark.streaming.stateful import (
         _duration_ms,
-        _make_emit_pane,
+        _make_pane_emitter,
     )
 
-    fn = _make_emit_pane(_duration_ms("1 minute"))
+    fn = _make_pane_emitter(
+        _duration_ms("1 minute"), (("user_id", "int"),), "count", None,
+        "int", "pane_count",
+    )
     w1 = pd.Timestamp("2024-01-01 00:05:00")
     w2 = pd.Timestamp("2024-01-01 00:06:00")
     w3 = pd.Timestamp("2024-01-01 00:07:00")
@@ -352,10 +387,13 @@ def test_emit_pane_null_window_dropped_null_key_passes_through():
 
     from tutorial_apache_beam_spark.streaming.stateful import (
         _duration_ms,
-        _make_emit_pane,
+        _make_pane_emitter,
     )
 
-    fn = _make_emit_pane(_duration_ms("1 minute"))
+    fn = _make_pane_emitter(
+        _duration_ms("1 minute"), (("user_id", "int"),), "count", None,
+        "int", "pane_count",
+    )
     w1 = pd.Timestamp("2024-01-01 00:05:00")
 
     # NaT rows silently dropped; only the real window is counted/stored.

@@ -113,10 +113,12 @@ def _variants():
         # The real emitter, its result truncated to 0 rows before the
         # arrow return: isolates pane-math compute from output transfer.
         from tutorial_apache_beam_spark.streaming.stateful import (
-            _make_emit_pane,
+            _make_pane_emitter,
         )
 
-        real = _make_emit_pane(60_000)
+        real = _make_pane_emitter(
+            60_000, (("user_id", "int"),), "count", None, "int", "pane_count"
+        )
 
         def _truncated(key, pdfs, state):
             for out in real(key, pdfs, state):

@@ -105,7 +105,7 @@ LINEAGE: list[tuple[str, str, str]] = [
     ("streaming_discarding_panes", "streaming_discarding_panes [r1]",
      "r11: + tagged `sum` branch — Sum.perKey(event_id) panes over a "
      "composite (user_id, event_type) key via the combiner-generic "
-     "pane_aggregate, a SECOND full drain alongside the historical "
+     "discarding_pane_aggregate, a SECOND full drain alongside the historical "
      "count branch (~2x the r10 slot's work); output columns unified "
      "to (combiner, window_start, user_id, event_type, pane_value, "
      "pane_index)"),

@@ -193,10 +193,10 @@ def _stats_bytes(df: DataFrame) -> int | None:
 
 
 def select_neardup_impl(mode: str, n_rows: int | None = None) -> str:
-    """Pick the embedding near-dup pair implementation (the
-    `select_pane_impl` pattern): 'exact' (blocked BLAS all-pairs — the
-    oracle tier, quadratic by contract) or 'bucketed' (SRP-LSH candidate
-    buckets + exact verify — subquadratic candidates, recall < 1).
+    """Pick the embedding near-dup pair implementation: 'exact'
+    (blocked BLAS all-pairs — the oracle tier, quadratic by contract)
+    or 'bucketed' (SRP-LSH candidate buckets + exact verify —
+    subquadratic candidates, recall < 1).
     mode='auto' takes exact at or below EXACT_ALLPAIRS_ROW_THRESHOLD
     rows and bucketed above it; without a row count, auto takes the
     scale-safe bucketed path."""

@@ -20,7 +20,7 @@ Semantics mapping (SURVEY §2.3):
   "update" = re-emit changed accumulated counts per micro-batch
   (≈ late firings, accumulating panes). Bit-exact per-pane *deltas*
   (discardingFiredPanes) are the one behavior output modes can't express;
-  they live in `streaming.stateful.discarding_pane_counts`
+  they live in `streaming.stateful.discarding_pane_aggregate`
   (applyInPandasWithState, SURVEY W5/§4.2).
 """
 
@@ -96,12 +96,9 @@ class WindowingSpec:
     allowed_lateness: str | None = None
     # Beam pane accumulation (r10, VERDICT r9 item 5): None = final
     # result per window (the default append/complete mapping);
-    # "discarding" / "accumulating" / "auto" select per-firing pane
-    # semantics for downstream Count.per_key, priced by the measured
-    # cost model in streaming/stateful.select_pane_impl. expected_keys
-    # is the cardinality hint that model prices against.
+    # "discarding" / "accumulating" select per-firing pane semantics
+    # for a downstream per-key combine (see WindowInto).
     accumulation: str | None = None
-    expected_keys: int | None = None
 
     def watermark_delay_ms(self) -> int:
         """Beam keeps skew and lateness separate; Spark has one watermark
@@ -321,14 +318,17 @@ class WindowInto(PTransform):
     elements).
 
     `accumulation` maps Beam's pane modes (r10, VERDICT r9 item 5):
-    `.discardingFiredPanes()` → "discarding", `.accumulatingFiredPanes()`
-    → "accumulating", or "auto" to let the measured cost model pick
-    (streaming/stateful.select_pane_impl prices the per-key Python floor
-    of the fidelity path against `expected_keys`). A downstream
+    `.discardingFiredPanes()` → "discarding" (per-firing deltas with
+    pane ordinals, streaming/stateful.discarding_pane_aggregate),
+    `.accumulatingFiredPanes()` → "accumulating" (JVM incremental
+    aggregation, accumulated values, NULL ordinals). The mode is the
+    caller's statement of meaning — the two emit different values, so
+    nothing picks between them on the caller's behalf. A downstream
     `Count.per_key` then emits per-FIRING panes
     (window_start, key, pane_count, pane_index) instead of one final
     row per window; leaving `accumulation=None` keeps the final-result
-    mapping (Demo2.java:151-157 routes "discarding" here).
+    mapping (Demo2.java:151-157 routes "discarding" here). Any other
+    value is refused here, at construction.
     """
 
     def __init__(
@@ -336,12 +336,15 @@ class WindowInto(PTransform):
         window_fn: WindowFn,
         allowed_lateness: str | None = None,
         accumulation: str | None = None,
-        expected_keys: int | None = None,
     ):
+        if accumulation not in (None, "discarding", "accumulating"):
+            raise ValueError(
+                f"unknown pane accumulation {accumulation!r}: expected "
+                "None, 'discarding' or 'accumulating'"
+            )
         self.window_fn = window_fn
         self.allowed_lateness = allowed_lateness
         self.accumulation = accumulation
-        self.expected_keys = expected_keys
 
     def expand(self, pcoll: PCollection) -> PCollection:
         if pcoll.spec.ts_col is None:
@@ -352,7 +355,6 @@ class WindowInto(PTransform):
             allowed_skew=pcoll.spec.allowed_skew,
             allowed_lateness=self.allowed_lateness,
             accumulation=self.accumulation,
-            expected_keys=self.expected_keys,
         )
         df = pcoll.df
         if df.isStreaming:
@@ -412,12 +414,12 @@ class _PerKeyAgg(PTransform):
     def _expand_panes(
         self, pcoll: PCollection, pane: tuple[str, str | None]
     ) -> PCollection:
-        """Route a pane-accumulation combine through the priced selector
-        (streaming/stateful.pane_aggregate) so the Pipeline API gets the
-        same measured discarding-vs-accumulating choice as the operator
-        layer. Emits per-firing rows (window_start, *keys,
-        pane_count|pane_value, pane_index). r11: combiner-generic,
-        multi-key, fixed AND sliding windows (VERDICT r10 items 1+5)."""
+        """Route a pane-accumulation combine to the operator its mode
+        names (streaming/stateful.discarding_pane_aggregate or
+        accumulating_pane_aggregate). Emits per-firing rows
+        (window_start, *keys, pane_count|pane_value, pane_index). r11:
+        combiner-generic, multi-key, fixed AND sliding windows (VERDICT
+        r10 items 1+5)."""
         spec = pcoll.spec
         session_gap = None
         if isinstance(spec.window_fn, FixedWindows):
@@ -435,7 +437,8 @@ class _PerKeyAgg(PTransform):
             session_gap = spec.window_fn.gap
         agg, value_col = pane
         from tutorial_apache_beam_spark.streaming.stateful import (
-            pane_aggregate,
+            accumulating_pane_aggregate,
+            discarding_pane_aggregate,
         )
 
         # The pane operators apply their OWN watermark (on a derived
@@ -457,7 +460,12 @@ class _PerKeyAgg(PTransform):
                     "transform before WindowInto or after the combine"
                 )
             src = pcoll.df
-        out = pane_aggregate(
+        pane_fn = (
+            discarding_pane_aggregate
+            if spec.accumulation == "discarding"
+            else accumulating_pane_aggregate
+        )
+        out = pane_fn(
             src,
             ts_col=spec.ts_col,
             key_cols=self.key_cols,
@@ -467,8 +475,6 @@ class _PerKeyAgg(PTransform):
             slide_duration=slide,
             watermark_delay=f"{spec.watermark_delay_ms()} milliseconds",
             session_gap=session_gap,
-            mode=spec.accumulation,
-            expected_keys=spec.expected_keys,
         )
         return pcoll._with(out)
 

@@ -41,6 +41,7 @@ import io
 import json
 import os
 import re
+import warnings
 
 from dataclasses import dataclass
 from datetime import date
@@ -730,6 +731,11 @@ class AvroStagedFiles(WriterCommitMessage):
     staged: list  # [(out_dir, tmp_path)]
 
 
+# Set once a stream sink has warned that the commit-marker directory
+# fsync failed; later failures in the same process stay quiet.
+_DIR_FSYNC_WARNED = False
+
+
 class AvroFallbackStreamWriter(DataSourceStreamWriter):
     """writeStream.format("avro_fallback") with EXACTLY-ONCE epochs via
     the same two-phase protocol as the engine's parquet streaming sink
@@ -807,10 +813,22 @@ class AvroFallbackStreamWriter(DataSourceStreamWriter):
         # the narrow staged-dirs sweep past stale finals in other
         # partition dirs. A directory fsync pins the rename before any
         # phase-2 promote starts.
+        global _DIR_FSYNC_WARNED
         try:
             dfd = os.open(self._local, os.O_RDONLY)
-        except OSError:
-            return  # non-POSIX dir-open semantics: best effort
+        except OSError as exc:
+            # Non-POSIX dir-open semantics: best effort, but the first
+            # failure per process warns instead of passing silently.
+            if not _DIR_FSYNC_WARNED:
+                _DIR_FSYNC_WARNED = True
+                warnings.warn(
+                    f"avro_fallback stream sink: cannot fsync directory "
+                    f"{self._local!r} ({exc}); the commit marker's rename "
+                    "is not durable against power loss",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
+            return
         try:
             os.fsync(dfd)
         finally:

@@ -1,29 +1,35 @@
 """Custom stateful streaming operators (applyInPandasWithState).
 
-`discarding_pane_counts` / `pane_aggregate` reproduce Beam's
-`discardingFiredPanes()` semantics bit-exactly (reference Demo2.java:157,
-SURVEY W5) — the one behavior Spark's output modes don't express:
+`discarding_pane_aggregate` (and its single-key count view
+`discarding_pane_counts`) reproduces Beam's `discardingFiredPanes()`
+semantics bit-exactly (reference Demo2.java:157, SURVEY W5) — the one
+behavior Spark's output modes don't express:
 
 - Beam discarding mode: each firing of a (key, window) pane emits only the
   delta accumulated since the previous firing (the combine accumulator is
   reset after every firing).
-- Spark `update` mode: re-emits the accumulated total per trigger.
+- Spark `update` mode: re-emits the accumulated total per trigger — Beam's
+  `accumulatingFiredPanes()`, served by `accumulating_pane_aggregate`
+  (JVM incremental aggregation, no Python). The two modes emit
+  different values, so the caller picks the one it means.
 
 Here each micro-batch's new rows for a (window, key) group ARE the pane
 content, so the per-trigger emission is the batch-local aggregate, with a
 monotonically increasing `pane_index` carried in the state store (Beam's
-PaneInfo.index analog). For the summable combiners (count/sum) combining a
-key's panes reproduces the accumulated result; for min/max the running
-min/max over panes equals the final; for mean each pane carries the
-pane-local mean (Beam's discarding mean is likewise pane-local — the
-firings do not compose into the global mean, by design).
+PaneInfo.index analog). Every combiner takes the same path: raw
+(window_start, keys[, value]) rows go straight into the per-key emitter.
+For the summable combiners (count/sum) combining a key's panes
+reproduces the accumulated result; for min/max the running min/max over
+panes equals the final; for mean each pane carries the pane-local mean
+(Beam's discarding mean is likewise pane-local — the firings do not
+compose into the global mean, by design).
 
 r11 generalization (VERDICT r10 items 1 and 5): the pane machinery is
-combiner-generic (`pane_aggregate` with agg in count/sum/min/max/mean over
-a numeric value column), multi-key (composite grouping keys, integral or
-string), and window-generic (FixedWindows and SlidingWindows — a sliding
-bucket just yields several window_start rows per event, which the
-per-window state dict already handles).
+combiner-generic (count/sum/min/max/mean over a numeric value column),
+multi-key (composite grouping keys, integral or string), and
+window-generic (FixedWindows and SlidingWindows — a sliding bucket just
+yields several window_start rows per event, which the per-window state
+dict already handles).
 
 r12 closes the last pane-surface refusal: SESSION windows
 (`session_gap=`), Beam's `Sessions.withGapDuration` composed with
@@ -63,7 +69,6 @@ state store shards by key exactly like the built-in streaming aggregation
 
 from __future__ import annotations
 
-import warnings
 from collections.abc import Iterator
 from typing import Any
 
@@ -273,8 +278,9 @@ def _pane_frame(
     key_specs: tuple[tuple[str, str], ...],
     value_name: str,
 ) -> pd.DataFrame:
-    """Output-frame construction for the session pane body (starts in
-    epoch MICROSECONDS — Spark timestamp precision): dtypes match the
+    """Output-frame construction shared by both pane bodies (fixed/sliding
+    `_agg_panes` and session `_session_panes`; starts in epoch
+    MICROSECONDS — Spark timestamp precision): dtypes match the
     plan-time output schema exactly (datetime64[ns] window_start, int64
     key/value columns, int32 pane_index; null key cells ride an object
     column)."""
@@ -558,14 +564,6 @@ def _make_pane_emitter(
     return _emit_pane
 
 
-def _make_emit_pane(window_ms: int):
-    """Historical count-only emitter factory (single `user_id` BIGINT
-    key) — kept as the named construction the unit tests drive."""
-    return _make_pane_emitter(
-        window_ms, (("user_id", "int"),), "count", None, "int", "pane_count"
-    )
-
-
 def _pane_plan(
     events: DataFrame,
     ts_col: str,
@@ -661,110 +659,6 @@ def _pane_plan(
         # per-window pane state needs no slide awareness at all.
         bucket = F.window(F.col(ts_col), window_duration, slide_duration)
     return tuple(key_specs), value_kind, value_name, T.StructType(fields), bucket
-
-
-def _map_side_pane_partials(
-    projected: DataFrame,
-    key_cols: list[str],
-    agg: str,
-    value_col: str | None,
-    value_kind: str,
-) -> DataFrame:
-    """Partition-local pre-aggregation in front of the discarding-pane
-    state operator, for the DECOMPOSABLE combiners (r14, VERDICT r13
-    item 3 / guide §2.2-§2.3 "aggregate before you shuffle"): instead of
-    shuffling every raw (window_start, keys[, value]) row into the
-    per-key Python state operator, each scan partition reduces its rows
-    to one (window_start, keys, _partial) row per (window, keys) group —
-    count panes carry partial counts, sum panes partial sums — and the
-    state emitter combines partials with agg='sum'.
-
-    EQUIVALENCE (recorded in SCALING.md): a discarding pane is the
-    combiner over exactly the rows that arrived in one micro-batch.
-    count/sum are associative-commutative with an identity, so
-    sum-of-partition-partials over a batch equals the combiner over the
-    batch's raw rows, for ANY partitioning of the batch — and the
-    partials preserve the batch boundary (mapInPandas runs inside the
-    micro-batch), the distinct window_start values (so watermark
-    advancement, late-row filtering, window pruning and pane_index
-    bookkeeping see the same per-batch window set), and the null rules
-    (null-valued rows contribute nothing to a sum pane; a group whose
-    batch rows are ALL null-valued emits no partial, so the emitter
-    never sees the window — exactly the raw path, where such rows are
-    dropped inside the emitter). min/max would decompose too, but mean
-    does not (pane-local mean needs the raw count), and the engine keeps
-    the raw path for all three so the non-summable combiners stay one
-    code path (VERDICT r13 item 3 scoped the rewrite to count/sum).
-
-    What this buys at scale: shuffle rows into the state exchange drop
-    from |batch| to at most |scan partitions| × |touched (window, key)
-    groups|, and the per-key emitter aggregates a handful of partials
-    instead of every raw row. The per-GROUP applyInPandasWithState API
-    floor (~0.57 ms/group, upstream) is unchanged — this removes the
-    per-ROW Arrow transfer and emitter-body terms.
-
-    Key-column dtypes ride pandas' nullable handling: integral keys with
-    nulls arrive as float64 and are emitted as nullable Int64 — exact
-    for |k| < 2^53, the same bound the module's Arrow transfer already
-    has for values.
-    """
-    import pandas as pd
-
-    if "_partial" in key_cols:
-        raise ValueError(
-            "pane pre-aggregation reserves the column name '_partial'; "
-            "rename the grouping key"
-        )
-    out_type = "long" if value_kind == "int" else "double"
-    key_fields = ", ".join(
-        f"`{k}` {projected.schema[k].dataType.simpleString()}"
-        for k in key_cols
-    )
-    out_schema = (
-        f"window_start timestamp, {key_fields}, _partial {out_type}"
-    )
-    gcols = ["window_start"] + list(key_cols)
-    int_keys = [
-        k
-        for k in key_cols
-        if isinstance(projected.schema[k].dataType, _INTEGRAL_TYPES)
-    ]
-
-    def _partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list[pd.DataFrame] = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            g = pdf.groupby(gcols, dropna=False, sort=False)
-            if agg == "count":
-                part = g.size().reset_index(name="_partial")
-            else:
-                stats = g[value_col].agg(
-                    _partial="sum", _nn="count"
-                ).reset_index()
-                # Drop all-null groups (non-null count == 0): the raw
-                # path's emitter never emits for them either.
-                part = stats[stats["_nn"] > 0].drop(columns=["_nn"])
-            acc.append(part)
-        if not acc:
-            return
-        merged = pd.concat(acc) if len(acc) > 1 else acc[0]
-        if len(acc) > 1:
-            merged = (
-                merged.groupby(gcols, dropna=False, sort=False)["_partial"]
-                .sum()
-                .reset_index()
-            )
-        # Integral keys that picked up float64 (nullable) along the way
-        # go back out as Arrow-safe nullable Int64.
-        for k in int_keys:
-            if merged[k].dtype == "float64":
-                merged[k] = merged[k].astype("Int64")
-        if value_kind == "int" and merged["_partial"].dtype == "float64":
-            merged["_partial"] = merged["_partial"].astype("int64")
-        yield merged
-
-    return projected.mapInPandas(_partials, out_schema)
 
 
 def discarding_pane_aggregate(
@@ -885,33 +779,19 @@ def discarding_pane_aggregate(
             value_col,
             F.nanvl(F.col(value_col), F.lit(None).cast("double")),
         )
-    if agg in ("count", "sum"):
-        # Decomposable combiners shuffle (window, keys, partial) instead
-        # of raw rows (r14 — see _map_side_pane_partials for the
-        # equivalence argument); the emitter sums the partials. The
-        # watermark is declared ON the partials (event-time metadata
-        # does not survive an opaque mapInPandas): the partials carry
-        # every distinct window_start of the batch, so advancement and
-        # late-row filtering are value-identical to the raw path.
-        stream_in = _map_side_pane_partials(
-            bucketed, key_cols, agg, value_col, value_kind
-        ).withWatermark("window_start", effective_delay)
-        emitter = _make_pane_emitter(
-            _duration_ms(window_duration), key_specs, "sum", "_partial",
-            value_kind, value_name,
+    return (
+        bucketed.withWatermark("window_start", effective_delay)
+        .groupBy(*key_cols)
+        .applyInPandasWithState(
+            _make_pane_emitter(
+                _duration_ms(window_duration), key_specs, agg, value_col,
+                value_kind, value_name,
+            ),
+            out_schema,
+            STATE_SCHEMA,
+            "append",
+            GroupStateTimeout.EventTimeTimeout,
         )
-    else:
-        stream_in = bucketed.withWatermark("window_start", effective_delay)
-        emitter = _make_pane_emitter(
-            _duration_ms(window_duration), key_specs, agg, value_col,
-            value_kind, value_name,
-        )
-    return stream_in.groupBy(*key_cols).applyInPandasWithState(
-        emitter,
-        out_schema,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -926,7 +806,7 @@ def accumulating_pane_aggregate(
     watermark_delay: str = "2 minutes",
     session_gap: str | None = None,
 ) -> DataFrame:
-    """The JVM fast path of the pane selector, combiner-generic:
+    """Beam's `.accumulatingFiredPanes()`, combiner-generic: JVM
     incremental windowed aggregation with the pane output schema. Run
     under UPDATE output mode each trigger re-emits the ACCUMULATED
     aggregate for keys the batch touched — Beam's
@@ -946,10 +826,10 @@ def accumulating_pane_aggregate(
     'discarding' (which emits every touched session every batch).
 
     pane_index is NULL by contract: firing ordinals require per-key state
-    the JVM aggregation doesn't track; callers who need them asked for
-    'discarding' and priced it. The aggregate column is cast to the
+    the JVM aggregation doesn't track; callers who need them use
+    `discarding_pane_aggregate`. The aggregate column is cast to the
     discarding path's type (BIGINT for integral sum/min/max and count,
-    DOUBLE otherwise) so mode='auto' cannot change the output schema.
+    DOUBLE otherwise) so both pane modes share one output schema.
     """
     key_cols = list(key_cols)
     key_specs, value_kind, value_name, _schema, bucket = _pane_plan(
@@ -1004,148 +884,4 @@ def discarding_pane_counts(
         agg="count",
         window_duration=window_duration,
         watermark_delay=watermark_delay,
-    )
-
-
-# Measured pane-path cost model (tools/pane_attrib.py, SCALING.md "Pane
-# operator wall, attributed"): the per-group Python API pays ~0.26 ms of
-# emitter compute per (key x micro-batch) invocation — pd.concat,
-# datetime64 view, np.unique, output-frame construction — and that floor
-# is inherent to the API (the body is already vectorized; it cannot be
-# batched across keys from user code). The JVM incremental aggregation
-# has no such term, which is why it is the 100-TB default when per-pane
-# DELTAS aren't required.
-PANE_EMITTER_MS_PER_KEY_BATCH = 0.26
-# Python-emitter seconds per micro-batch "auto" is willing to buy for
-# pane fidelity before switching to the JVM path: 1 s / 0.26 ms ~ 3,800
-# keys. Below it the fidelity path's overhead is trigger-interval noise
-# (sf0.1's 1,500 users drain in ~3.5 s total); above it the overhead
-# compounds every micro-batch (15k keys measured +3.95 s emitter compute
-# per drain, 150k keys 34x wall).
-AUTO_PANE_BUDGET_S = 1.0
-AUTO_KEY_THRESHOLD = int(AUTO_PANE_BUDGET_S * 1000 / PANE_EMITTER_MS_PER_KEY_BATCH)
-
-
-def _pane_cost_msg(expected_keys: int) -> str:
-    est_s = expected_keys * PANE_EMITTER_MS_PER_KEY_BATCH / 1000
-    return (
-        f"discarding-pane fidelity costs ~{PANE_EMITTER_MS_PER_KEY_BATCH} ms "
-        f"of Python emitter compute per key per micro-batch (measured, "
-        f"tools/pane_attrib.py): at {expected_keys:,} keys that is "
-        f"~{est_s:.1f} s added to EVERY micro-batch. If per-pane deltas + "
-        f"firing ordinals aren't required, use mode='accumulating' (JVM "
-        f"incremental aggregation, no per-key Python floor)."
-    )
-
-
-def select_pane_impl(mode: str, expected_keys: int | None = None) -> str:
-    """Pick the pane implementation: 'discarding' (applyInPandasWithState,
-    Beam pane deltas + firing ordinals) or 'accumulating' (JVM incremental
-    windowed aggregation, Beam accumulatingFiredPanes under update mode).
-
-    - mode='discarding'/'accumulating': honored verbatim; 'discarding'
-      with expected_keys past the budget WARNS with the measured cost
-      model rather than silently degrading throughput.
-    - mode='auto': semantics-preserving cardinality selector for callers
-      who want per-firing rows but not specifically deltas — fidelity
-      while it's cheap (expected_keys <= AUTO_KEY_THRESHOLD), the JVM
-      path once the per-key Python floor would dominate the drain.
-      Without an expected_keys hint auto takes the scale-safe JVM path
-      (unbounded streams can't be counted at plan time).
-    """
-    if mode == "accumulating":
-        return "accumulating"
-    if mode == "discarding":
-        if expected_keys is not None and expected_keys > AUTO_KEY_THRESHOLD:
-            warnings.warn(_pane_cost_msg(expected_keys), stacklevel=3)
-        return "discarding"
-    if mode == "auto":
-        if expected_keys is not None and expected_keys <= AUTO_KEY_THRESHOLD:
-            return "discarding"
-        return "accumulating"
-    raise ValueError(
-        f"unknown pane mode {mode!r}: expected 'discarding', "
-        "'accumulating', or 'auto'"
-    )
-
-
-def accumulating_pane_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    window_duration: str = "1 minute",
-    watermark_delay: str = "2 minutes",
-) -> DataFrame:
-    """Single-key count view over `accumulating_pane_aggregate` (Demo2's
-    aggregation with the pane output schema)."""
-    return accumulating_pane_aggregate(
-        events,
-        ts_col=ts_col,
-        key_cols=[key_col],
-        agg="count",
-        window_duration=window_duration,
-        watermark_delay=watermark_delay,
-    )
-
-
-def pane_aggregate(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_cols: list[str] | tuple[str, ...] = ("user_id",),
-    value_col: str | None = None,
-    agg: str = "count",
-    window_duration: str = "1 minute",
-    slide_duration: str | None = None,
-    watermark_delay: str = "2 minutes",
-    session_gap: str | None = None,
-    mode: str = "auto",
-    expected_keys: int | None = None,
-) -> DataFrame:
-    """Per-(window, keys) combiner firings with the pane implementation
-    chosen by the measured cost model (see `select_pane_impl`). Both
-    paths emit (window_start, *keys, pane_count|pane_value, pane_index);
-    'accumulating' emits cumulative aggregates with NULL pane_index (run
-    under update mode), 'discarding' emits per-firing deltas with Beam
-    pane ordinals. `session_gap` (r12) selects merging session windows
-    on either path.
-    """
-    impl = select_pane_impl(mode, expected_keys)
-    fn = (
-        discarding_pane_aggregate
-        if impl == "discarding"
-        else accumulating_pane_aggregate
-    )
-    return fn(
-        events,
-        ts_col=ts_col,
-        key_cols=key_cols,
-        value_col=value_col,
-        agg=agg,
-        window_duration=window_duration,
-        slide_duration=slide_duration,
-        watermark_delay=watermark_delay,
-        session_gap=session_gap,
-    )
-
-
-def pane_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    window_duration: str = "1 minute",
-    watermark_delay: str = "2 minutes",
-    mode: str = "auto",
-    expected_keys: int | None = None,
-) -> DataFrame:
-    """Single-key count view over `pane_aggregate` — the historical
-    entrypoint the Demo2 gates drive."""
-    return pane_aggregate(
-        events,
-        ts_col=ts_col,
-        key_cols=[key_col],
-        agg="count",
-        window_duration=window_duration,
-        watermark_delay=watermark_delay,
-        mode=mode,
-        expected_keys=expected_keys,
     )
