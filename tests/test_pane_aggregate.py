@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tutorial_apache_beam_spark.streaming.stateful import (
-    _agg_panes,
+    _bucket_panes,
     accumulating_pane_aggregate,
     discarding_pane_aggregate,
 )
@@ -342,7 +342,7 @@ def _pandas_reference(pdf, state, key_values, key_names, agg, value_col):
 
 @pytest.mark.parametrize("agg", ["count", "sum", "min", "max", "mean"])
 def test_agg_panes_differential_vs_pandas_reference(agg):
-    """Property check across combiners: the np.unique+reduceat body must
+    """Property check across combiners: the lexsort+reduceat body must
     agree with a plain pandas groupby on random frames with NaT windows,
     null values, and arbitrary pre-existing pane-index state."""
     rng = np.random.default_rng(11)
@@ -367,9 +367,9 @@ def test_agg_panes_differential_vs_pandas_reference(agg):
                 int(rng.integers(0, 4))
             for m in range(5) if rng.random() < 0.5
         }
-        got_state = dict(pre_state)
-        got = _agg_panes(
-            pdf, got_state, (42,), (("user_id", "int"),), agg=agg,
+        got_state = {(42, w): i for w, i in pre_state.items()}
+        got = _bucket_panes(
+            pdf.assign(user_id=42), got_state, (("user_id", "int"),), agg=agg,
             value_col=None if agg == "count" else "v",
             value_kind="float", value_name="pane_value"
             if agg != "count" else "pane_count",
@@ -388,7 +388,9 @@ def test_agg_panes_differential_vs_pandas_reference(agg):
         for g, r in zip(got_rows, ref):
             assert g[0] == r[0] and g[1] == r[1] and g[3] == r[3], (agg, trial)
             assert g[2] == pytest.approx(r[2]), (agg, trial)
-        assert got_state == ref_state, (agg, trial)
+        assert got_state == {
+            (42, w): i for w, i in ref_state.items()
+        }, (agg, trial)
 
 
 def test_agg_panes_all_null_value_window_emits_nothing():
@@ -401,8 +403,8 @@ def test_agg_panes_all_null_value_window_emits_nothing():
         "v": pd.Series([None, None], dtype="float64"),
     })
     state: dict = {}
-    out = _agg_panes(
-        pdf, state, (1,), (("user_id", "int"),), agg="sum",
+    out = _bucket_panes(
+        pdf.assign(user_id=1), state, (("user_id", "int"),), agg="sum",
         value_col="v", value_kind="float", value_name="pane_value",
     )
     assert len(out) == 0 and state == {}

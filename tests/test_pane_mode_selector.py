@@ -267,6 +267,10 @@ def test_pane_key_contract_name_and_type(spark, tmp_path):
     renamed = stream.withColumnRenamed("device_id", "pane_index")
     with pytest.raises(ValueError, match="collides with a pane"):
         discarding_pane_aggregate(renamed, key_cols=["pane_index"])
+    # ...and so does the hash-bucket column the pane state groups by.
+    renamed = stream.withColumnRenamed("device_id", "_pane_bucket")
+    with pytest.raises(ValueError, match="collides with a pane"):
+        discarding_pane_aggregate(renamed, key_cols=["_pane_bucket"])
 
 
 def test_non_count_combiner_refuses_pane_accumulation(spark, tmp_path):

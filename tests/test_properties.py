@@ -143,10 +143,10 @@ def test_pane_deltas_sum_to_totals(firings):
 
     from tutorial_apache_beam_spark.streaming.stateful import (
         _duration_ms,
-        _make_pane_emitter,
+        _make_bucket_pane_emitter,
     )
 
-    fn = _make_pane_emitter(
+    fn = _make_bucket_pane_emitter(
         _duration_ms("1 minute"), (("user_id", "int"),), "count", None,
         "int", "pane_count",
     )
@@ -162,7 +162,7 @@ def test_pane_deltas_sum_to_totals(firings):
                 "user_id": [7] * len(windows),
             }
         )
-        for out in fn((7,), iter([batch]), state):
+        for out in fn((0,), iter([batch]), state):
             emitted.extend(out.to_dict("records"))
 
     per_window: dict = {}

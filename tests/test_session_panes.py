@@ -331,6 +331,84 @@ def test_unit_all_invalid_batch_leaves_state_untouched():
     assert str(out["pane_value"].dtype) == "float64"
 
 
+def test_unit_bucket_session_emitter_keys_share_one_state_row():
+    """Two keys and a null key in one bucket call: each key sessionizes
+    against its own open sessions, the bucket's state row holds every
+    (key, session) entry, its ONE timer sits at the newest session end
+    across keys (rounded up to the ms), and the watermark prune drops
+    closed sessions entry by entry."""
+    from tutorial_apache_beam_spark.streaming.stateful import (
+        _make_bucket_session_emitter,
+    )
+
+    class _State:
+        exists, hasTimedOut, timeout_ts = False, False, None
+
+        def __init__(self, wm_ms):
+            self.wm_ms = wm_ms
+
+        @property
+        def get(self):
+            return self.value
+
+        def update(self, v):
+            self.exists, self.value = True, v
+
+        def setTimeoutTimestamp(self, ts):
+            self.timeout_ts = ts
+
+        def getCurrentWatermarkMs(self):
+            return self.wm_ms
+
+    fn = _make_bucket_session_emitter(
+        GAP_US, SPECS, "count", None, "int", "pane_count", "ts"
+    )
+
+    def batch(rows):
+        return pd.DataFrame({
+            "ts": np.array([t for t, _ in rows], dtype="int64")
+            .astype("datetime64[us]"),
+            "user_id": pd.Series([u for _, u in rows], dtype="float64"),
+        })
+
+    def entries(st):
+        keys, starts, ends, idxs = st.get
+        return sorted(
+            zip(keys, starts, ends, idxs), key=lambda e: (str(e[0]), e[1])
+        )
+
+    state = _State(wm_ms=0)
+    (out,) = fn((0,), iter([batch([
+        (0, 7), (GAP_US // 2, 7), (0, 9), (5 * GAP_US + 1, 9), (0, None),
+    ])]), state)
+    got = sorted(
+        (
+            (None if pd.isna(r.user_id) else int(r.user_id), r.pane_count,
+             r.pane_index)
+            for r in out.itertuples()
+        ),
+        key=str,
+    )
+    assert got == [(7, 2, 0), (9, 1, 0), (9, 1, 0), (None, 1, 0)]
+    assert entries(state) == [
+        (7, 0, GAP_US // 2 + GAP_US, 1),
+        (9, 0, GAP_US, 1),
+        (9, 5 * GAP_US + 1, 6 * GAP_US + 1, 1),
+        (None, 0, GAP_US, 1),
+    ]
+    # ONE timer for the bucket: key 9's newest end, rounded UP to the ms.
+    assert state.timeout_ts == -(-(6 * GAP_US + 1) // 1000)
+
+    # Watermark at 1.5 gaps closes key 9's first session and the null
+    # key's; key 7's session (end 1.5 gaps) is closed too (end == wm).
+    # A row for key 9 inside its open session continues ordinal 1.
+    pruned = _State(wm_ms=(GAP_US + GAP_US // 2) // 1000)
+    pruned.update(state.get)
+    (out2,) = fn((0,), iter([batch([(5 * GAP_US + 2, 9)])]), pruned)
+    assert out2["pane_index"].tolist() == [1]
+    assert entries(pruned) == [(9, 5 * GAP_US + 1, 6 * GAP_US + 2, 2)]
+
+
 def test_pane_aggregate_routes_session_gap_both_modes(spark, tmp_path):
     """`session_gap=` on both explicit modes: `accumulating_pane_aggregate`
     builds the JVM session aggregation with no Python node in the plan,

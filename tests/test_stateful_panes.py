@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -261,57 +262,89 @@ class _FakeState:
 
 
 def test_emit_pane_arms_event_time_timer_and_cleans_up():
+    """Two keys in one bucket call: pane ordinals are independent per
+    key, the bucket arms ONE timer at the newest window end across its
+    keys, and pruning drops closed (key, window) entries one by one."""
     import pandas as pd
 
     from tutorial_apache_beam_spark.streaming.stateful import (
         _duration_ms,
-        _make_pane_emitter,
+        _make_bucket_pane_emitter,
     )
 
-    fn = _make_pane_emitter(
+    fn = _make_bucket_pane_emitter(
         _duration_ms("1 minute"), (("user_id", "int"),), "count", None,
         "int", "pane_count",
     )
     w1 = pd.Timestamp("2024-01-01 00:05:00")
     w2 = pd.Timestamp("2024-01-01 00:07:00")
-    key = (7,)
+    w3 = pd.Timestamp("2024-01-01 00:09:00")
+
+    def ms(w):
+        return w.value // 1_000_000
+
+    def entries(st):
+        keys, wins, idxs = st.get
+        return {(k, w): i for k, w, i in zip(keys, wins, idxs)}
+
+    bucket = (0,)
     state = _FakeState(watermark_ms=0)
     batch = pd.DataFrame(
-        {"window_start": [w1] * 3 + [w2], "user_id": [7] * 4}
+        {
+            "window_start": [w1] * 3 + [w2] + [w1, w3],
+            "user_id": [7] * 4 + [8] * 2,
+        }
     )
 
-    (out,) = list(fn(key, iter([batch]), state))
-    by_win = {r.window_start: r for r in out.itertuples()}
-    assert by_win[w1].pane_count == 3 and by_win[w1].pane_index == 0
-    assert by_win[w2].pane_count == 1 and by_win[w2].pane_index == 0
-    # State holds both open windows' next pane index.
-    assert dict(zip(*state.get)) == {
-        w1.value // 1_000_000: 1,
-        w2.value // 1_000_000: 1,
+    (out,) = list(fn(bucket, iter([batch]), state))
+    by_pane = {(r.user_id, r.window_start): r for r in out.itertuples()}
+    assert by_pane[7, w1].pane_count == 3 and by_pane[7, w1].pane_index == 0
+    assert by_pane[7, w2].pane_count == 1 and by_pane[7, w2].pane_index == 0
+    assert by_pane[8, w1].pane_count == 1 and by_pane[8, w1].pane_index == 0
+    assert by_pane[8, w3].pane_count == 1 and by_pane[8, w3].pane_index == 0
+    # State holds every open (key, window) entry's next pane index.
+    assert entries(state) == {
+        (7, ms(w1)): 1, (7, ms(w2)): 1, (8, ms(w1)): 1, (8, ms(w3)): 1,
     }
-    # ONE timer per key, armed at the NEWEST window's end, so the whole
-    # entry is dropped once the watermark passes it instead of growing
-    # forever.
-    assert state.timeout_ts == w2.value // 1_000_000 + 60_000
+    # ONE timer per bucket, armed at the NEWEST window end across its
+    # keys (key 8's w3), so the whole row is dropped once the watermark
+    # passes it instead of growing forever.
+    assert state.timeout_ts == ms(w3) + 60_000
 
-    # A later firing for w1 increments only w1's pane index.
-    (out2,) = list(fn(key, iter([batch.iloc[:2]]), state))
-    assert out2["pane_index"].iloc[0] == 1
+    # A later firing for (7, w1) increments only that entry's pane
+    # index; key 8's first w2 pane starts at 0 although (7, w2) fired.
+    batch2 = pd.DataFrame(
+        {"window_start": [w1, w1, w2], "user_id": [7, 7, 8]}
+    )
+    (out2,) = list(fn(bucket, iter([batch2]), state))
+    got2 = {
+        (r.user_id, r.window_start): r.pane_index for r in out2.itertuples()
+    }
+    assert got2 == {(7, w1): 1, (8, w2): 0}
 
-    # Windows whose end passed the watermark are pruned inline.
-    pruned_state = _FakeState(watermark_ms=w1.value // 1_000_000 + 60_000)
+    # Windows whose end passed the watermark are pruned inline, entry by
+    # entry: both keys' w1 go, their later windows stay.
+    pruned_state = _FakeState(watermark_ms=ms(w1) + 60_000)
     pruned_state.update(state.get)
-    list(fn(key, iter([pd.DataFrame({"window_start": [w2], "user_id": [7]})]), pruned_state))
-    assert list(pruned_state.get[0]) == [w2.value // 1_000_000]
+    list(
+        fn(
+            bucket,
+            iter([pd.DataFrame({"window_start": [w2], "user_id": [7]})]),
+            pruned_state,
+        )
+    )
+    assert entries(pruned_state) == {
+        (7, ms(w2)): 2, (8, ms(w2)): 1, (8, ms(w3)): 1,
+    }
 
     # Spark guarantee: timestamp must beat the current watermark.
     late_state = _FakeState(watermark_ms=10**15)
-    list(fn(key, iter([batch]), late_state))
+    list(fn(bucket, iter([batch]), late_state))
     assert late_state.timeout_ts == 10**15 + 1
 
     # Timed-out invocation removes state and emits nothing.
     state.hasTimedOut = True
-    assert list(fn(key, iter([]), state)) == []
+    assert list(fn(bucket, iter([]), state)) == []
     assert state.removed
 
 
@@ -326,10 +359,10 @@ def test_emit_pane_output_contract_vectorized_path():
 
     from tutorial_apache_beam_spark.streaming.stateful import (
         _duration_ms,
-        _make_pane_emitter,
+        _make_bucket_pane_emitter,
     )
 
-    fn = _make_pane_emitter(
+    fn = _make_bucket_pane_emitter(
         _duration_ms("1 minute"), (("user_id", "int"),), "count", None,
         "int", "pane_count",
     )
@@ -351,7 +384,7 @@ def test_emit_pane_output_contract_vectorized_path():
         }
     )
     state = _FakeState(watermark_ms=0)
-    (out,) = list(fn((7,), iter([f1, f2]), state))
+    (out,) = list(fn((0,), iter([f1, f2]), state))
 
     # Ascending window order — what groupby(sort=True) produced before.
     assert list(out["window_start"]) == [w1, w2, w3]
@@ -369,7 +402,7 @@ def test_emit_pane_output_contract_vectorized_path():
     # Second firing for one window continues its pane index from state.
     (out2,) = list(
         fn(
-            (7,),
+            (0,),
             iter([pd.DataFrame({"window_start": [w2], "user_id": [7]})]),
             state,
         )
@@ -387,10 +420,10 @@ def test_emit_pane_null_window_dropped_null_key_passes_through():
 
     from tutorial_apache_beam_spark.streaming.stateful import (
         _duration_ms,
-        _make_pane_emitter,
+        _make_bucket_pane_emitter,
     )
 
-    fn = _make_pane_emitter(
+    fn = _make_bucket_pane_emitter(
         _duration_ms("1 minute"), (("user_id", "int"),), "count", None,
         "int", "pane_count",
     )
@@ -401,28 +434,28 @@ def test_emit_pane_null_window_dropped_null_key_passes_through():
     batch = pd.DataFrame(
         {"window_start": [w1, pd.NaT, w1, pd.NaT], "user_id": [7] * 4}
     )
-    (out,) = list(fn((7,), iter([batch]), state))
+    (out,) = list(fn((0,), iter([batch]), state))
     assert list(out["window_start"]) == [w1]
     assert list(out["pane_count"]) == [2]
-    assert list(state.get[0]) == [w1.value // 1_000_000]
+    assert list(state.get[1]) == [w1.value // 1_000_000]
 
     # All-NaT batch: empty output frame, no state entries invented.
     state2 = _FakeState(watermark_ms=0)
     batch2 = pd.DataFrame({"window_start": [pd.NaT], "user_id": [7]})
-    outs2 = list(fn((7,), iter([batch2]), state2))
+    outs2 = list(fn((0,), iter([batch2]), state2))
     assert len(outs2) == 1 and len(outs2[0]) == 0
-    assert list(state2.get[0]) == []
+    assert list(state2.get[1]) == []
 
     # Null grouping key: null user_id rows, like the pre-vectorized path.
     state3 = _FakeState(watermark_ms=0)
     batch3 = pd.DataFrame({"window_start": [w1, w1], "user_id": [None, None]})
-    (out3,) = list(fn((None,), iter([batch3]), state3))
+    (out3,) = list(fn((0,), iter([batch3]), state3))
     assert list(out3["pane_count"]) == [2]
     assert out3["user_id"].iloc[0] is None
 
 
 def test_count_panes_differential_vs_groupby_reference():
-    """Property check: the count form of _agg_panes must agree with the
+    """Property check: the count form of _bucket_panes must agree with the
     pre-vectorization groupby(sort=True) reference on randomized inputs —
     window sets with duplicates, NaT holes, arbitrary order, any pandas
     datetime unit, and arbitrary pre-existing pane-index state."""
@@ -431,7 +464,7 @@ def test_count_panes_differential_vs_groupby_reference():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from tutorial_apache_beam_spark.streaming.stateful import _agg_panes
+    from tutorial_apache_beam_spark.streaming.stateful import _bucket_panes
 
     base_ms = int(pd.Timestamp("2024-01-01").value // 1_000_000)
 
@@ -473,16 +506,124 @@ def test_count_panes_differential_vs_groupby_reference():
                 "user_id": [7] * len(ts),
             }
         )
-        state_a = {base_ms + m * 60_000: i for m, i in state_idx.items()}
-        state_b = dict(state_a)
+        state_b = {base_ms + m * 60_000: i for m, i in state_idx.items()}
+        state_a = {(7, w): i for w, i in state_b.items()}
 
-        got = _agg_panes(pdf, state_a, (7,), (("user_id", "int"),), agg="count")
+        got = _bucket_panes(pdf, state_a, (("user_id", "int"),), agg="count")
         want = reference(pdf, state_b, 7)
 
         assert [pd.Timestamp(t) for t in got["window_start"]] == want["window_start"]
         assert list(got["pane_count"]) == want["pane_count"]
         assert list(got["pane_index"]) == want["pane_index"]
         assert list(got["user_id"]) == want["user_id"]
-        assert state_a == state_b  # identical post-call pane-index state
+        # identical post-call pane-index state
+        assert state_a == {(7, w): i for w, i in state_b.items()}
 
     check()
+
+
+@pytest.mark.parametrize(
+    "key_cols", [["user_id"], ["user_id", "device"]], ids=["bigint", "composite"]
+)
+def test_many_keys_restart_matches_pandas_reference(spark, tmp_path, key_cols):
+    """300 users share the hash buckets (several keys per bucket), over
+    three one-file micro-batches whose windows span the files, with one
+    null-key row, and a stop plus restart from the checkpoint after the
+    first file. The sink must equal a pandas reference: per file, the
+    count of each (window, keys) group, fired with ordinal = how many
+    earlier files held that group."""
+    import pandas as pd
+
+    from tutorial_apache_beam_spark.streaming.stateful import (
+        BUCKET_COL,
+        PANE_BUCKETS,
+        _with_pane_bucket,
+    )
+
+    devices = ["web", "ios", "android"]
+    files = []
+    for f in range(3):
+        rows = [
+            {
+                # 90 seconds from 00:00:30: windows 00:00 and 00:01 both
+                # collect rows in every file, and nothing is ever late.
+                "event_time": BASE_EPOCH + (u * 7 + f * 13 + i * 29) % 90,
+                "user_id": u,
+                "device": devices[(u + i) % 3],
+            }
+            for u in range(300)
+            for i in range(1 + (u + f) % 3)
+        ]
+        if f == 0:
+            rows.append(
+                {"event_time": BASE_EPOCH, "user_id": None, "device": "web"}
+            )
+        files.append((f"b{f}.json", rows))
+
+    schema = "event_time BIGINT, user_id BIGINT, device STRING"
+    src, ckpt, sink = tmp_path / "src", tmp_path / "ckpt", tmp_path / "sink"
+    src.mkdir()
+
+    def drain():
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1")
+            .json(str(src))
+            .select(F.timestamp_seconds("event_time").alias("ts"), *key_cols)
+        )
+        q = (
+            discarding_pane_aggregate(stream, key_cols=key_cols)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", str(sink))
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    _write_ordered(src, files[:1])
+    drain()  # stop after the first file; restart from its checkpoint
+    _write_ordered(src, files[1:])
+    drain()
+
+    out = spark.read.parquet(str(sink)).select(
+        F.unix_seconds("window_start").alias("w"), *key_cols,
+        "pane_count", "pane_index",
+    )
+    got = Counter(tuple(r) for r in out.collect())
+
+    ref = pd.DataFrame(
+        [dict(r, file=f) for f, (_, rows) in enumerate(files) for r in rows]
+    )
+    ref["w"] = ref["event_time"] // 60 * 60
+    per_file = (
+        ref.groupby(["w", *key_cols, "file"], dropna=False)
+        .size()
+        .rename("pane_count")
+        .reset_index()
+        .sort_values("file", kind="stable")
+    )
+    per_file["pane_index"] = per_file.groupby(
+        ["w", *key_cols], dropna=False
+    ).cumcount()
+    want = Counter(
+        tuple(
+            None if pd.isna(r[c]) else (r[c] if c == "device" else int(r[c]))
+            for c in ["w", *key_cols, "pane_count", "pane_index"]
+        )
+        for _, r in per_file.iterrows()
+    )
+    assert got == want
+    # Groups fired in all three files, across the restart.
+    assert max(t[-1] for t in want) == 2
+    # Several keys really share each bucket.
+    keys = ref[key_cols].dropna().drop_duplicates().astype({"user_id": "int64"})
+    per_bucket = (
+        _with_pane_bucket(spark.createDataFrame(keys), key_cols)
+        .groupBy(BUCKET_COL)
+        .count()
+        .collect()
+    )
+    assert len(per_bucket) <= PANE_BUCKETS
+    assert len(keys) / len(per_bucket) > 3

@@ -1,18 +1,20 @@
 """Attribute the discarding-panes operator's 10x wall ratio (r7 task 6).
 
-The pane drain's wall tracks KEY COUNT (4.3x at 10x = 15k keys, 34x at
-100x = 150k keys) while the Demo2 JVM aggregation over the same source
-grows ~2.6x — something per-key in the Python layer dominates. This
+With per-key pane state the drain's wall tracked KEY COUNT (4.3x at
+10x = 15k keys, 34x at 100x = 150k keys) while the Demo2 JVM aggregation
+over the same source grew ~2.6x — something per-key in the Python layer
+dominated; the state is now grouped by hash bucket instead. This
 splits the wall into three additive layers by draining the SAME 10x
 source three ways in one session (min over --runs each):
 
   jvm_floor      source scan + shuffle + incremental JVM agg (append) —
                  everything BELOW the Python layer
-  trivial_state  same keyed shuffle through applyInPandasWithState with
-                 a do-nothing function (one tiny state read+write per
-                 key, no pane math, near-zero output) — adds the arrow
-                 transfer, per-key Python invocation, and state-server
-                 round-trips
+  trivial_state  same bucketed shuffle through applyInPandasWithState
+                 (grouped by the operator's hash-bucket column, same
+                 state schema) with a do-nothing function (one tiny
+                 state read+write per bucket, no pane math, near-zero
+                 output) — adds the arrow transfer, per-bucket Python
+                 invocation, and state-server round-trips
   full           the real discarding_pane_counts operator — adds the
                  pane-counting emitter and the output transfer back
 
@@ -53,10 +55,17 @@ def _variants():
 
     from tutorial_apache_beam_spark.streaming.replay import stream_events
     from tutorial_apache_beam_spark.streaming.stateful import (
+        _WINDOW_STATE_TAIL,
+        BUCKET_COL,
         OUTPUT_SCHEMA,
-        STATE_SCHEMA,
+        _bucket_state_schema,
+        _make_bucket_pane_emitter,
+        _with_pane_bucket,
         discarding_pane_counts,
     )
+
+    key_specs = (("user_id", "int"),)
+    state_schema = _bucket_state_schema(key_specs, _WINDOW_STATE_TAIL)
 
     def _bucketed(spark):
         sdf = stream_events(spark, FIXTURE)
@@ -66,6 +75,12 @@ def _variants():
             )
             .withWatermark("window_start", "2 minutes")
             .select("window_start", "user_id")
+        )
+
+    def _pane_buckets(spark):
+        # The real operator's grouping: the hash-bucket column.
+        return _with_pane_bucket(_bucketed(spark), ["user_id"]).groupBy(
+            BUCKET_COL
         )
 
     def jvm_floor(spark):
@@ -79,7 +94,7 @@ def _variants():
             n = 0
             for pdf in pdfs:
                 n += len(pdf)
-            state.update(([0], [n]))
+            state.update(([0], [0], [n]))
             # OUTPUT_SCHEMA is a DDL string; emit an empty frame with
             # its column names so the arrow return path stays exercised
             # at zero rows.
@@ -87,12 +102,10 @@ def _variants():
             yield pd.DataFrame(columns=cols)
 
         return (
-            _bucketed(spark)
-            .groupBy("user_id")
-            .applyInPandasWithState(
+            _pane_buckets(spark).applyInPandasWithState(
                 _noop,
                 OUTPUT_SCHEMA,
-                STATE_SCHEMA,
+                state_schema,
                 "append",
                 GroupStateTimeout.EventTimeTimeout,
             ),
@@ -112,12 +125,8 @@ def _variants():
     def full_no_output(spark):
         # The real emitter, its result truncated to 0 rows before the
         # arrow return: isolates pane-math compute from output transfer.
-        from tutorial_apache_beam_spark.streaming.stateful import (
-            _make_pane_emitter,
-        )
-
-        real = _make_pane_emitter(
-            60_000, (("user_id", "int"),), "count", None, "int", "pane_count"
+        real = _make_bucket_pane_emitter(
+            60_000, key_specs, "count", None, "int", "pane_count"
         )
 
         def _truncated(key, pdfs, state):
@@ -125,12 +134,10 @@ def _variants():
                 yield out.iloc[0:0]
 
         return (
-            _bucketed(spark)
-            .groupBy("user_id")
-            .applyInPandasWithState(
+            _pane_buckets(spark).applyInPandasWithState(
                 _truncated,
                 OUTPUT_SCHEMA,
-                STATE_SCHEMA,
+                state_schema,
                 "append",
                 GroupStateTimeout.EventTimeTimeout,
             ),
@@ -199,9 +206,10 @@ def pane_key_curve_section(
     runs: int = 1,
 ) -> dict:
     """Wall of one availableNow pane drain (file source, parquet sink)
-    at a fixed event volume and rising distinct-key counts: the pane
-    emitter pays a Python invocation per key per micro-batch, so its
-    wall tracks key count, not event volume.
+    at a fixed event volume and rising distinct-key counts. The pane
+    emitter pays one Python invocation per hash bucket per micro-batch,
+    so its wall should stay flat as keys grow (a per-key invocation made
+    it track key count, not event volume).
 
     Each point first runs an untimed 1/10-size drain, so the timed
     numbers are steady state (the first drain of a session absorbs the

@@ -17,8 +17,8 @@ Here each micro-batch's new rows for a (window, key) group ARE the pane
 content, so the per-trigger emission is the batch-local aggregate, with a
 monotonically increasing `pane_index` carried in the state store (Beam's
 PaneInfo.index analog). Every combiner takes the same path: raw
-(window_start, keys[, value]) rows go straight into the per-key emitter.
-For the summable combiners (count/sum) combining a key's panes
+(window_start, keys[, value]) rows go straight into the per-bucket
+emitter. For the summable combiners (count/sum) combining a key's panes
 reproduces the accumulated result; for min/max the running min/max over
 panes equals the final; for mean each pane carries the pane-local mean
 (Beam's discarding mean is likewise pane-local — the firings do not
@@ -35,7 +35,7 @@ r12 closes the last pane-surface refusal: SESSION windows
 (`session_gap=`), Beam's `Sessions.withGapDuration` composed with
 `discardingFiredPanes` (reference bar: Demo2.java:149-157 — Beam
 composes any WindowFn with any pane mode). Merging windows have no
-plan-time window identity, so the per-key state tracks SESSION
+plan-time window identity, so each key's state tracks SESSION
 INTERVALS (start, end, next pane ordinal) instead of fixed window
 starts, merging on overlap-or-touch (new ts within gap of a session's
 last event — `start2 <= end1`, Spark's own session rule). PANE-IDENTITY
@@ -53,18 +53,29 @@ equals the current watermark is closed (keep rule `end > watermark`,
 same as the fixed-window path), so an event landing exactly on both
 boundaries starts a new session.
 
-Scale / performance design — state is keyed by the GROUPING KEY, not
-(window, key): applyInPandasWithState pays a per-group Python invocation
-(~0.3 ms), so grouping by (window, key) means one call per window-key pair
-— measured 66x more groups than users on the fixture (99,921 vs 1,500 at
-sf0.1) and a 53 s drain. Keying by user alone holds the open windows' pane
-indexes in two parallel array columns, cutting invocations to one per user
-per micro-batch. Expired windows (end below the current watermark) are
-pruned inline on every call, and ONE event-time timer per key (re-armed at
-the newest window end) removes the whole entry when the key goes idle — so
-state stays bounded on unbounded streams without per-window timers. The
-state store shards by key exactly like the built-in streaming aggregation
-(HDFS/RocksDB-backed at cluster scale).
+Scale / performance design — state is keyed by a HASH BUCKET of the
+grouping keys, `pmod(hash(keys), PANE_BUCKETS)`, not by the key and not
+by (window, key). applyInPandasWithState pays a Python invocation, an
+Arrow state row and an output frame per group per micro-batch, so the
+group count is the cost driver: r8 measured 66x more (window, key)
+groups than users (99,921 vs 1,500 at sf0.1, a 53 s drain) and moved
+state to the key; a per-key group still paid one call per key per
+micro-batch, so wall rose with key count (SCALING.md "Key-bucketed
+pane state"). A bucket's state row holds its keys' open windows (or
+sessions) and pane ordinals as parallel arrays — one array per key
+column plus the window arrays — and one call aggregates all of the
+bucket's (keys, window) groups in a single vectorized pass, so calls per
+micro-batch are at most PANE_BUCKETS whatever the key count. Closed
+windows (end at or below the watermark) are pruned inline on every
+call, and ONE event-time timer per bucket (re-armed at the newest open
+end across its keys) removes the whole row once every key in it is
+idle — state stays bounded on unbounded streams without per-window or
+per-key timers. Murmur3 `hash` has a fixed seed, so a key lands in the
+same bucket after a restart; the state store shards buckets exactly like
+the built-in streaming aggregation shards keys (HDFS/RocksDB-backed at
+cluster scale). The trade-off: the stateful stage runs at most
+PANE_BUCKETS non-empty state tasks, whatever
+`spark.sql.shuffle.partitions` says.
 """
 
 from __future__ import annotations
@@ -83,27 +94,32 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 OUTPUT_SCHEMA = (
     "window_start TIMESTAMP, user_id BIGINT, pane_count BIGINT, pane_index INT"
 )
-# Open windows for this key: window starts (epoch ms) + next pane index.
-STATE_SCHEMA = "win_ms ARRAY<BIGINT>, pane_idx ARRAY<INT>"
-# Open SESSIONS for this key (r12): parallel interval arrays — start and
-# end epoch MICROSECONDS plus the next pane ordinal per session. Session
-# starts are raw event times (not bucket-truncated like fixed windows),
-# so the state carries Spark's native timestamp precision — an epoch-ms
-# view would silently truncate `window_start` by up to 999 µs (caught
-# live against the DuckDB oracle's min(ts)). A separate state shape from
-# STATE_SCHEMA (fixed/sliding windows need no end: it is
-# start + window_ms), carried by the session-pane operators only, so
-# existing fixed-window checkpoints are untouched.
-SESSION_STATE_SCHEMA = (
+# Hash buckets the pane state is grouped by (module docstring, "Scale /
+# performance design"); chosen from the key-count curve in SCALING.md
+# "Key-bucketed pane state". A constant, not an option: changing it moves
+# keys between buckets, so a checkpoint only restarts under the value it
+# was written with.
+PANE_BUCKETS = 64
+BUCKET_COL = "_pane_bucket"
+# Per-bucket state tails after the one ARRAY column per key column:
+# fixed/sliding windows carry window starts (epoch ms) + next pane
+# ordinal; sessions carry start and end in epoch MICROSECONDS (session
+# starts are raw event times, so an epoch-ms view would truncate
+# `window_start` by up to 999 µs — caught live against the DuckDB
+# oracle's min(ts)) + next pane ordinal. Entry i of every array is one
+# open (keys, window) or (keys, session).
+_WINDOW_STATE_TAIL = "win_ms ARRAY<BIGINT>, pane_idx ARRAY<INT>"
+_SESSION_STATE_TAIL = (
     "sess_start ARRAY<BIGINT>, sess_end ARRAY<BIGINT>, pane_idx ARRAY<INT>"
 )
 
-# Output columns every pane emission owns — a grouping key with one of
-# these names would collide with the emitted schema (Spark only errors
-# later, on the first ambiguous reference), so the plan refuses them
-# up front (ADVICE r10 item 1).
+# Output columns every pane emission owns, plus the bucket column the
+# plan adds — a grouping key with one of these names would collide with
+# the emitted schema or the bucket (Spark only errors later, on the first
+# ambiguous reference), so the plan refuses them up front (ADVICE r10
+# item 1).
 RESERVED_PANE_COLS = frozenset(
-    {"window_start", "pane_count", "pane_value", "pane_index"}
+    {"window_start", "pane_count", "pane_value", "pane_index", BUCKET_COL}
 )
 
 # Combiners with a per-firing delta form: the batch-local aggregate IS
@@ -179,33 +195,54 @@ def _require_utc_session(df: DataFrame, operator: str) -> None:
         )
 
 
-def _agg_panes(
+def _key_value(v, kind: str):
+    """One grouping-key cell as its Python state/output value: None for
+    null (Arrow delivers a null integral cell as NaN in a float64 column,
+    a null string as None or NaN), int for integral keys, str otherwise.
+
+    A float64 view of an integral key is exact only below 2^53 — the
+    same bound Spark's own Arrow transfer has for nullable longs — so a
+    key at or beyond it raises instead of being emitted rounded."""
+    if v is None or v != v:
+        return None
+    if kind == "int":
+        if isinstance(v, float) and abs(v) >= 2**53:
+            raise ValueError(
+                f"integral pane key {v!r} arrived as float64 beside a null "
+                "key in its batch and is not exact at or beyond 2^53"
+            )
+        return int(v)
+    return v
+
+
+def _bucket_panes(
     pdf: pd.DataFrame,
-    open_windows: dict,
-    key_values: tuple,
+    open_panes: dict,
     key_specs: tuple[tuple[str, str], ...],
     agg: str = "count",
     value_col: str | None = None,
     value_kind: str = "int",
     value_name: str = "pane_count",
 ) -> pd.DataFrame:
-    """Aggregate a micro-batch's rows per window and assign pane indexes —
-    the hot-path body of the fixed/sliding-window pane emitter
-    (`_make_pane_emitter`), which runs once per key per micro-batch.
+    """Aggregate one hash bucket's micro-batch rows per (keys, window)
+    and assign pane ordinals — the body of the fixed/sliding-window pane
+    emitter (`_make_bucket_pane_emitter`), run once per bucket per
+    micro-batch.
 
-    Aggregates on the int64-epoch view with np.unique + ufunc.reduceat
-    instead of a pandas groupby (~4x less per-call time, measured on the
-    count path; np.unique sorts ascending exactly like
-    groupby(sort=True)). window_start is already window-truncated, so the
-    ms view is lossless. Semantics carried over from the groupby path the
-    count form replaced, plus Spark aggregate null rules:
+    One vectorized pass for all the bucket's keys: each key column is
+    factorized (null is its own code), the rows are lexsorted by
+    (key codes..., window epoch ms) and cut where any of them changes,
+    and every group is aggregated at once with ufunc.reduceat. Output
+    is ordered by key code, then ascending window. window_start is
+    already window-truncated, so the ms view is lossless. Null rules,
+    exact for every combiner:
 
-    - null window_start rows are DROPPED (pandas groupby excludes NaT
-      keys — a null event time has no window);
-    - null grouping-key values emit null key cells (object column, like
-      the list-built output before vectorization);
+    - null window_start rows are DROPPED (a null event time has no
+      window);
+    - null grouping-key cells group together and emit null key cells
+      (an object column, like any key column holding a null);
     - null VALUE rows are ignored (Spark's sum/min/max/avg skip nulls);
-      a window whose batch rows are all-null-valued emits no pane row
+      a group whose batch rows are all-null-valued emits no pane row
       for that firing (Beam combiners never see nulls at all). Float
       NaN is treated as missing too, BY CONTRACT on both pane paths
       (the plan normalizes NaN → NULL before aggregating): this
@@ -217,30 +254,41 @@ def _agg_panes(
     NaN) and are cast back to int64 after the null drop — exact for
     |v| < 2^53, the same bound Spark's own Arrow transfer has.
 
-    MUTATES `open_windows` in place: each emitted window's next pane
-    index is bumped. Returns the output frame (possibly empty), dtypes
-    matching the plan-time output schema exactly.
+    `open_panes` maps (key values..., window epoch ms) to the next pane
+    ordinal and is MUTATED in place: each emitted group's ordinal is
+    bumped. Returns the output frame (possibly empty), dtypes matching
+    the plan-time output schema exactly.
     """
     w_all = pdf["window_start"].to_numpy().astype("datetime64[ms]")
     valid = ~np.isnat(w_all)
-    if agg == "count":
-        uniq_ms, values = np.unique(
-            w_all[valid].astype("int64"), return_counts=True
-        )
-        values = values.astype("int64")
-    else:
+    if agg != "count":
         v_series = pdf[value_col]
         valid &= v_series.notna().to_numpy()
-        w_ms = w_all[valid].astype("int64")
-        vals = v_series.to_numpy()[valid].astype(
+    w_ms = w_all[valid].astype("int64")
+    codes, key_uniques = [], []
+    for name, kind in key_specs:
+        c, u = pd.factorize(pdf[name].to_numpy()[valid], use_na_sentinel=False)
+        codes.append(c)
+        key_uniques.append([_key_value(v, kind) for v in u.tolist()])
+    # np.lexsort's LAST key is the primary one: keys first, window last.
+    order = np.lexsort((w_ms, *codes[::-1]))
+    w_sorted = w_ms[order]
+    codes_sorted = [c[order] for c in codes]
+    n = len(w_sorted)
+    brk = np.ones(n, dtype=bool)
+    if n:
+        brk[1:] = w_sorted[1:] != w_sorted[:-1]
+        for c in codes_sorted:
+            brk[1:] |= c[1:] != c[:-1]
+    starts = np.flatnonzero(brk)
+    counts = np.diff(np.append(starts, n))
+    if agg == "count":
+        values = counts.astype("int64")
+    else:
+        v_sorted = v_series.to_numpy()[valid].astype(
             "int64" if value_kind == "int" else "float64"
-        )
-        order = np.argsort(w_ms, kind="stable")
-        w_sorted, v_sorted = w_ms[order], vals[order]
-        uniq_ms, starts, counts = np.unique(
-            w_sorted, return_index=True, return_counts=True
-        )
-        if len(uniq_ms) == 0:
+        )[order]
+        if n == 0:
             values = v_sorted[:0]
         elif agg == "sum":
             values = np.add.reduceat(v_sorted, starts)
@@ -249,24 +297,29 @@ def _agg_panes(
         elif agg == "max":
             values = np.maximum.reduceat(v_sorted, starts)
         elif agg == "mean":
-            values = (
-                np.add.reduceat(v_sorted, starts).astype("float64") / counts
-            )
+            values = np.add.reduceat(v_sorted, starts).astype("float64") / counts
         else:  # pragma: no cover — validated at plan time
             raise ValueError(f"unknown pane agg {agg!r}")
-        if agg == "mean":
-            values = values.astype("float64")
-    pane_indexes = np.empty(len(uniq_ms), dtype="int32")
-    for j, w_ms_j in enumerate(uniq_ms.tolist()):
-        idx = open_windows.get(w_ms_j, 0)
+    g_ms = w_sorted[starts]
+    key_columns: list[np.ndarray] = []
+    group_keys: list[list] = []
+    for (_, kind), c, uniq in zip(key_specs, codes_sorted, key_uniques):
+        g_codes = c[starts]
+        # Null key cells ride an object column; otherwise the schema's
+        # int64 (integral) or object (string) column.
+        dtype = "int64" if kind == "int" and None not in uniq else object
+        col = np.array(uniq, dtype=dtype)[g_codes]
+        key_columns.append(col)
+        group_keys.append(col.tolist())
+    pane_indexes = np.empty(len(starts), dtype="int32")
+    for j, pane in enumerate(zip(*group_keys, g_ms.tolist())):
+        idx = open_panes.get(pane, 0)
         pane_indexes[j] = idx
-        open_windows[w_ms_j] = idx + 1
-    # ONE frame-construction body for both pane shapes (_pane_frame
-    # takes epoch µs — window starts are ms-truncated so the x1000 view
-    # is lossless and exact within int64 range).
+        open_panes[pane] = idx + 1
+    # _pane_frame takes epoch µs — window starts are ms-truncated so the
+    # x1000 view is lossless and exact within int64 range.
     return _pane_frame(
-        uniq_ms * 1000, values, pane_indexes, key_values, key_specs,
-        value_name,
+        g_ms * 1000, values, pane_indexes, key_columns, key_specs, value_name,
     )
 
 
@@ -274,16 +327,17 @@ def _pane_frame(
     starts_us,
     values,
     pane_indexes,
-    key_values: tuple,
+    key_values,
     key_specs: tuple[tuple[str, str], ...],
     value_name: str,
 ) -> pd.DataFrame:
     """Output-frame construction shared by both pane bodies (fixed/sliding
-    `_agg_panes` and session `_session_panes`; starts in epoch
+    `_bucket_panes` and session `_session_panes`; starts in epoch
     MICROSECONDS — Spark timestamp precision): dtypes match the
     plan-time output schema exactly (datetime64[ns] window_start, int64
     key/value columns, int32 pane_index; null key cells ride an object
-    column)."""
+    column). Each entry of `key_values` is either a per-row ndarray or
+    one key's scalar value, broadcast to every row."""
     n = len(starts_us)
     data: dict[str, Any] = {
         "window_start": np.asarray(starts_us, dtype="int64")
@@ -291,24 +345,19 @@ def _pane_frame(
         .astype("datetime64[ns]")
     }
     for (name, kind), kv in zip(key_specs, key_values):
-        if kv is None:
-            # Plain object ndarray, NOT pd.Series([None]*n): passing a
-            # Series into the DataFrame dict pays index alignment on
-            # every call — measured 0.21 vs 0.11 ms per 8-row frame
-            # (r13); with one emitter call per key per micro-batch that
-            # doubled the composite-key pane drain's per-key floor.
-            data[name] = np.full(n, None, dtype=object)
-        elif kind == "int":
+        if isinstance(kv, np.ndarray):
+            data[name] = kv
+        elif kind == "int" and kv is not None:
             data[name] = np.full(n, kv, dtype="int64")
         else:
+            # Plain object ndarray, NOT pd.Series([kv]*n): a Series in
+            # the DataFrame dict pays index alignment on every frame.
             data[name] = np.full(n, kv, dtype=object)
     data[value_name] = values
     data["pane_index"] = np.asarray(pane_indexes, dtype="int32")
     # copy=False: every array above is freshly built per call and never
-    # mutated after this return, so the zero-copy wrap is safe — and it
-    # halves the construction cost (0.34 -> 0.19 ms per 8-row frame,
-    # pandas 2.2 measured r13), which is the dominant term of the
-    # per-key emitter floor.
+    # mutated after this return, so the zero-copy wrap is safe and
+    # skips a copy of each column.
     return pd.DataFrame(data, copy=False)
 
 
@@ -324,11 +373,11 @@ def _session_panes(
     gap_us: int,
     ts_col: str,
 ) -> pd.DataFrame:
-    """Session-window counterpart of `_agg_panes` — the body of the
-    session-pane emitter (`_make_session_pane_emitter`), run once per key
-    per micro-batch. All interval arithmetic is in epoch MICROSECONDS
-    (Spark timestamp precision — session starts are raw event times, so
-    a coarser view would truncate `window_start`).
+    """Session-window counterpart of `_bucket_panes` — run by the
+    session-pane emitter (`_make_bucket_session_emitter`) once per key
+    present in a bucket's micro-batch rows. All interval arithmetic is in
+    epoch MICROSECONDS (Spark timestamp precision — session starts are
+    raw event times, so a coarser view would truncate `window_start`).
 
     `sessions` is the key's open-session list, each entry
     [start_us, end_us, next_pane_idx] — MUTATED in place to the merged
@@ -342,7 +391,7 @@ def _session_panes(
     with the handful of open sessions in one sorted linear sweep
     (overlap-or-touch: next.start <= cur.end) — O(groups + sessions)
     Python on top of the vectorized row work, so per-row cost stays
-    numpy-side. Null semantics carried over from `_agg_panes`, by
+    numpy-side. Null semantics carried over from `_bucket_panes`, by
     contract on both pane paths: null event times are dropped, null (or
     NaN-normalized) VALUE rows are ignored entirely — they neither
     aggregate NOR extend a session's extent — and a batch whose rows
@@ -449,7 +498,27 @@ def _session_panes(
     )
 
 
-def _make_session_pane_emitter(
+def _bucket_state(state: GroupState, n_keys: int, n_tail: int) -> list:
+    """A bucket's state row as its parallel arrays (key columns first,
+    then the window or session tail), or empty arrays for a new bucket."""
+    return list(state.get) if state.exists else [[]] * (n_keys + n_tail)
+
+
+def _store_bucket_state(state: GroupState, entries, n_cols: int) -> None:
+    """Write a bucket's open entries (tuples, one per (keys, window) or
+    (keys, session)) back as its parallel-array state row."""
+    cols = list(zip(*entries)) if entries else [()] * n_cols
+    state.update(tuple(list(c) for c in cols))
+
+
+def _concat_batches(batches: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
+    frames = [b for b in batches if len(b)]
+    if not frames:
+        return None
+    return pd.concat(frames) if len(frames) > 1 else frames[0]
+
+
+def _make_bucket_session_emitter(
     gap_us: int,
     key_specs: tuple[tuple[str, str], ...],
     agg: str,
@@ -458,59 +527,67 @@ def _make_session_pane_emitter(
     value_name: str,
     ts_col: str,
 ):
-    """Per-KEY session-pane emitter: open-session intervals +
-    pane ordinals in three parallel array columns (epoch µs); inline
-    pruning of sessions the watermark closed; ONE re-armed event-time
-    timer per key at the newest session end for idle-key cleanup — the
-    same state and timer shape as the fixed-window emitter. Watermark
-    and timer ride Spark's millisecond API: the prune compares in µs
-    (wm_ms * 1000), the timer target rounds the newest end UP to the
-    next ms so the cleanup can never fire before a session truly
-    closes."""
+    """Per-BUCKET session-pane emitter: the bucket's open sessions as
+    parallel arrays (one per key column, then start, end in epoch µs and
+    next pane ordinal); inline pruning of sessions the watermark closed;
+    the bucket's rows split by key (nulls form their own key) and each
+    key's rows sessionized by `_session_panes` against that key's open
+    sessions; ONE re-armed event-time timer per bucket at the newest
+    session end across its keys. Watermark and timer ride Spark's
+    millisecond API: the prune compares in µs (wm_ms * 1000), the timer
+    target rounds the newest end UP to the next ms so the cleanup can
+    never fire before a session truly closes."""
+    n_keys = len(key_specs)
+    key_names = [name for name, _ in key_specs]
+    kinds = [kind for _, kind in key_specs]
 
-    def _emit_session_pane(
-        key: tuple[Any, ...],
+    def _emit_session_bucket(
+        bucket: tuple[Any, ...],
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
+            # Watermark passed every session of every key in the bucket.
             state.remove()
             return
-        frames = [b for b in batches if len(b)]
-        if not frames:
+        pdf = _concat_batches(batches)
+        if pdf is None:
             return
-        pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-
-        starts, ends, idxs = state.get if state.exists else ([], [], [])
+        *key_lists, starts, ends, idxs = _bucket_state(state, n_keys, 3)
         watermark_ms = state.getCurrentWatermarkMs()
         wm_us = watermark_ms * 1000
-        sessions = [
-            [s, e, i]
-            for s, e, i in zip(starts, ends, idxs)
-            if e > wm_us  # closed sessions cannot be extended
-        ]
+        sessions_by_key: dict[tuple, list[list]] = {}
+        for *keys, s, e, i in zip(*key_lists, starts, ends, idxs):
+            if e > wm_us:  # closed sessions cannot be extended
+                sessions_by_key.setdefault(tuple(keys), []).append([s, e, i])
 
-        yield _session_panes(
-            pdf, sessions, key, key_specs, agg, value_col, value_kind,
-            value_name, gap_us, ts_col,
-        )
-
-        state.update(
-            (
-                [s[0] for s in sessions],
-                [s[1] for s in sessions],
-                [s[2] for s in sessions],
+        outs = []
+        for raw_key, rows in pdf.groupby(key_names, dropna=False, sort=False):
+            keys = tuple(_key_value(v, k) for v, k in zip(raw_key, kinds))
+            outs.append(
+                _session_panes(
+                    rows, sessions_by_key.setdefault(keys, []), keys,
+                    key_specs, agg, value_col, value_kind, value_name,
+                    gap_us, ts_col,
+                )
             )
-        )
+        yield pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+
+        entries = [
+            (*keys, *session)
+            for keys, sessions in sessions_by_key.items()
+            for session in sessions
+        ]
+        _store_bucket_state(state, entries, n_keys + 3)
         newest_end_ms = (
-            -(-max(s[1] for s in sessions) // 1000) if sessions else 0
+            -(-max(e[-2] for e in entries) // 1000) if entries else 0
         )
         state.setTimeoutTimestamp(max(newest_end_ms, watermark_ms + 1))
 
-    return _emit_session_pane
+    return _emit_session_bucket
 
 
-def _make_pane_emitter(
+def _make_bucket_pane_emitter(
     window_ms: int,
     key_specs: tuple[tuple[str, str], ...],
     agg: str,
@@ -518,50 +595,104 @@ def _make_pane_emitter(
     value_kind: str,
     value_name: str,
 ):
-    """Build the per-KEY pane emitter with the combiner and window length
-    baked in (the window end drives both inline pruning and the idle-key
-    timer)."""
+    """Per-BUCKET fixed/sliding pane emitter with the combiner and window
+    length baked in: the bucket's open (keys, window) entries as parallel
+    arrays (one per key column, then window start epoch ms and next pane
+    ordinal), pruned inline once the window's end passes the watermark;
+    `_bucket_panes` aggregates all of the bucket's keys at once; ONE
+    re-armed event-time timer per bucket at the newest open window end
+    across its keys."""
+    n_keys = len(key_specs)
 
-    def _emit_pane(
-        key: tuple[Any, ...],
+    def _emit_pane_bucket(
+        bucket: tuple[Any, ...],
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
-            # Watermark passed every window this key had open: drop it all.
+            # Watermark passed every window of every key in the bucket.
             state.remove()
             return
-        frames = [b for b in batches if len(b)]
-        if not frames:
+        pdf = _concat_batches(batches)
+        if pdf is None:
             return
-        pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-
-        win_ms, pane_idx = state.get if state.exists else ([], [])
-        open_windows = dict(zip(win_ms, pane_idx))
-
-        # Inline cleanup: drop windows whose end passed the watermark (their
-        # rows can no longer arrive — Spark filters them upstream).
+        *key_lists, win_ms, pane_idx = _bucket_state(state, n_keys, 2)
+        # Inline cleanup: drop windows whose end passed the watermark
+        # (their rows can no longer arrive — Spark filters them upstream).
         watermark_ms = state.getCurrentWatermarkMs()
-        if watermark_ms:
-            open_windows = {
-                w: i for w, i in open_windows.items() if w + window_ms > watermark_ms
-            }
+        open_panes = {
+            pane: i
+            for pane, i in zip(zip(*key_lists, win_ms), pane_idx)
+            if not watermark_ms or pane[-1] + window_ms > watermark_ms
+        }
 
-        yield _agg_panes(
-            pdf, open_windows, key, key_specs, agg, value_col,
-            value_kind, value_name,
+        yield _bucket_panes(
+            pdf, open_panes, key_specs, agg, value_col, value_kind,
+            value_name,
         )
 
-        state.update(
-            (list(open_windows.keys()), list(open_windows.values()))
+        _store_bucket_state(
+            state,
+            [(*pane, i) for pane, i in open_panes.items()],
+            n_keys + 2,
         )
-        # One timer per key: fire once the watermark passes the NEWEST open
-        # window's end (re-armed every batch). Spark requires a timestamp
-        # beyond the current watermark; clamp defensively.
-        newest_end = max(open_windows) + window_ms if open_windows else 0
+        # Fire once the watermark passes the NEWEST open window's end
+        # across the bucket's keys (re-armed every batch). Spark requires
+        # a timestamp beyond the current watermark; clamp defensively.
+        newest_end = (
+            max(pane[-1] for pane in open_panes) + window_ms
+            if open_panes
+            else 0
+        )
         state.setTimeoutTimestamp(max(newest_end, watermark_ms + 1))
 
-    return _emit_pane
+    return _emit_pane_bucket
+
+
+def _bucket_state_schema(
+    key_specs: tuple[tuple[str, str], ...], tail: str
+) -> str:
+    """DDL of a bucket's state row: one nullable ARRAY per key column
+    (`key0`, `key1`, ... — positional, so no key name can collide with
+    the tail), then the window or session tail."""
+    keys = ", ".join(
+        f"key{i} ARRAY<{'BIGINT' if kind == 'int' else 'STRING'}>"
+        for i, (_, kind) in enumerate(key_specs)
+    )
+    return f"{keys}, {tail}"
+
+
+def _with_pane_bucket(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Add the hash-bucket column both pane branches group by:
+    applyInPandasWithState groups by columns only, not expressions."""
+    return df.withColumn(
+        BUCKET_COL, F.pmod(F.hash(*key_cols), F.lit(PANE_BUCKETS))
+    )
+
+
+def _bucketed_pane_state(
+    rows: DataFrame,
+    key_cols: list[str],
+    watermark_delay: str,
+    emitter,
+    out_schema: T.StructType,
+    state_schema: str,
+) -> DataFrame:
+    """The stateful stage both pane branches share: bucket `rows` by
+    their keys, watermark the `window_start` column, and run `emitter`
+    once per bucket per micro-batch with an event-time timeout."""
+    return (
+        _with_pane_bucket(rows, key_cols)
+        .withWatermark("window_start", watermark_delay)
+        .groupBy(BUCKET_COL)
+        .applyInPandasWithState(
+            emitter,
+            out_schema,
+            state_schema,
+            "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
 
 
 def _pane_plan(
@@ -723,7 +854,7 @@ def discarding_pane_aggregate(
             ),
             *key_cols,
             *keep,
-        ).withWatermark("window_start", watermark_delay)
+        )
         if value_col is not None and isinstance(
             events.schema[value_col].dataType, _FLOAT_TYPES
         ):
@@ -731,16 +862,15 @@ def discarding_pane_aggregate(
                 value_col,
                 F.nanvl(F.col(value_col), F.lit(None).cast("double")),
             )
-        return sessions_in.groupBy(*key_cols).applyInPandasWithState(
-            _make_session_pane_emitter(
+        return _bucketed_pane_state(
+            sessions_in, key_cols, watermark_delay,
+            _make_bucket_session_emitter(
                 _duration_ms(session_gap) * 1000,  # interval math in µs
                 key_specs, agg, value_col,
                 value_kind, value_name, "window_start",
             ),
             out_schema,
-            SESSION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
+            _bucket_state_schema(key_specs, _SESSION_STATE_TAIL),
         )
     # The watermark must ride on a column that survives the projection, so
     # it is declared on the derived window_start (event-time truncated to
@@ -779,19 +909,14 @@ def discarding_pane_aggregate(
             value_col,
             F.nanvl(F.col(value_col), F.lit(None).cast("double")),
         )
-    return (
-        bucketed.withWatermark("window_start", effective_delay)
-        .groupBy(*key_cols)
-        .applyInPandasWithState(
-            _make_pane_emitter(
-                _duration_ms(window_duration), key_specs, agg, value_col,
-                value_kind, value_name,
-            ),
-            out_schema,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
+    return _bucketed_pane_state(
+        bucketed, key_cols, effective_delay,
+        _make_bucket_pane_emitter(
+            _duration_ms(window_duration), key_specs, agg, value_col,
+            value_kind, value_name,
+        ),
+        out_schema,
+        _bucket_state_schema(key_specs, _WINDOW_STATE_TAIL),
     )
 
 
