@@ -716,3 +716,33 @@ def test_cosine_topk_probe_cap_guards_driver(spark):
         cosine_topk(emb, emb, k=3, max_probes=10)  # corpus-as-probes
     # bounded sets work as before
     assert cosine_topk(emb, emb.limit(5), k=3, max_probes=10).count() == 15
+
+
+def test_ann_duplicate_corpus_id_takes_two_topk_slots(spark):
+    """The documented id-uniqueness contract of srp_ann_topk/ivf_ann_topk:
+    both key their dedup and re-join on `id_col`, so a corpus id stored
+    twice (here with identical vectors) is scored once per stored row —
+    two (probe, id) rows unranked, two of the probe's k slots ranked."""
+    import random
+
+    from tutorial_apache_beam_spark.operators.similarity import (
+        HYPERPLANE_TABLES,
+        ivf_ann_topk,
+    )
+
+    dim = len(HYPERPLANE_TABLES[0][0])
+    rnd = random.Random(3)
+    corpus = [(i, [rnd.uniform(-1, 1) for _ in range(dim)]) for i in range(60)]
+    corpus.append(corpus[7])  # vec_id 7 stored twice
+    probe = [(200, [2 * x for x in corpus[7][1]])]  # cosine 1.0 with id 7
+    schema = "vec_id long, embedding array<double>"
+    c, p = spark.createDataFrame(corpus, schema), spark.createDataFrame(probe, schema)
+    for name, ann in (
+        ("srp", srp_ann_topk),
+        ("ivf", lambda c, p, **kw: ivf_ann_topk(c, p, nprobe=2, **kw)),
+    ):
+        pairs = ann(c, p, k=3, rank=False).filter("vec_id = 7").collect()
+        assert [(r.probe_id, r.cos) for r in pairs] == [(200, 1.0)] * 2, name
+        top = ann(c, p, k=3).orderBy(F.desc("cos"), "vec_id").collect()
+        assert [r.vec_id for r in top][:2] == [7, 7], name
+        assert len(top) == 3 and top[2].vec_id != 7, name

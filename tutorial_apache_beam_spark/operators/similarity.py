@@ -590,6 +590,14 @@ def srp_ann_topk(
     The candidate join is an equi-join on (table, bucket) — shuffle volume
     is N_TABLES·(|corpus| + |probes|), independent of the pair space. More
     tables / fewer planes per table trade cost for recall.
+
+    Contract: `id_col` is unique in `corpus` and in `probes`. The
+    multi-table dedup is a distinct over (probe_id, id) keys, and vectors
+    re-attach by joining on the id, so a duplicated id is not collapsed.
+    Measured: a corpus id stored twice (identical vectors) yields two
+    identical (probe, id) rows and fills two of the probe's k slots; two
+    probes sharing an id pool their candidates into one top-k list.
+    Self-exclusion is by id, so a row never neighbors a probe of its id.
     """
     c = _bucket_rows(corpus.select(F.col(id_col), F.col(vec_col)), vec_col)
     p = _bucket_rows(
@@ -973,6 +981,13 @@ def ivf_ann_topk(
     probe-bucket candidate join is an equi-join on centroid_id whose
     volume is |corpus|·nprobe/n_centroids per probe on average — the
     IVF pruning factor.
+
+    Contract: `id_col` is unique in `corpus` and in `probes`; the
+    no-distinct join below relies on it. Measured: a corpus id stored
+    twice (identical vectors, so one bucket) yields two identical
+    (probe, id) rows and fills two of the probe's k slots; two probes
+    sharing an id pool their candidates into one top-k list.
+    Self-exclusion is by id, so a row never neighbors a probe of its id.
     """
     if centroids is None:
         # `id % N` only selects centroids for numeric ids (on strings it

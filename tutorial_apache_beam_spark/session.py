@@ -85,6 +85,14 @@ def get_spark(
         # footer sweep instead of a data scan. Catalyst only applies it
         # when semantics are exact (no filters, no partial groupings).
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # Python workers fork from our daemon, whose zip importers skip
+        # the per-task re-read of unchanged pyspark.zip / Spark jar
+        # directories (~250 ms of CPU per task on CPython 3.11). Importable
+        # through the PYTHONPATH set above.
+        .config(
+            "spark.python.daemon.module",
+            "tutorial_apache_beam_spark.worker_daemon",
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
