@@ -107,6 +107,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # partitioning (Kafka topic partitions) already fans the parse out; the
 # plan is deliberately left shuffle-free. Residual run-to-run spread on
 # this gate is the single-task JSON stage riding ambient machine load.
+# That single task parsed every message three times until the parse moved
+# into a Generate (operators/etl.py; SCALING.md "Click parse: one
+# `from_json` per message"): the optimizer had copied `from_json` into
+# the pushed-down null filter.
 HEADLINE = [
     "demo2_tumbling_counts",
     "q1_pricing_summary",

@@ -20,6 +20,18 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """`spark.driver.memory` unless SPARK_GRAFT_DRIVER_MEM is set: 16g,
+    capped at half of physical RAM. Local mode runs every executor inside
+    the driver JVM, and a heap that may grow to the whole host gets the
+    JVM killed by the kernel once other processes hold the rest."""
+    try:
+        physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{min(16 * 1024, physical // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "tutorial_apache_beam_spark",
     master: str | None = None,
@@ -94,7 +106,10 @@ def get_spark(
             "tutorial_apache_beam_spark.worker_daemon",
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
