@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import math
 import os
 import re
@@ -38,6 +40,38 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     yield con
     con.close()
+
+
+@pytest.fixture
+def jvm_process_starts(spark, tmp_path):
+    """Context manager recording the command line of every process the
+    session's JVM starts inside it (JFR `jdk.ProcessStart`). It yields a
+    list, filled when the block exits:
+
+        with jvm_process_starts() as commands:
+            ...
+        assert not [c for c in commands if c.startswith("readlink")]
+    """
+    jvm = spark.sparkContext._jvm
+    dumps = (tmp_path / f"process_starts-{i}.jfr" for i in itertools.count())
+
+    @contextlib.contextmanager
+    def record():
+        commands: list[str] = []
+        recording = jvm.jdk.jfr.Recording()
+        recording.enable("jdk.ProcessStart")
+        recording.start()
+        dump = jvm.java.io.File(str(next(dumps))).toPath()
+        try:
+            yield commands
+        finally:
+            recording.stop()
+            recording.dump(dump)
+            recording.close()
+        for event in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump):
+            commands.append(event.getString("command"))
+
+    return record
 
 
 # Logical plan nodes that run Python workers.

@@ -2,9 +2,9 @@
 
 Local mode is the test harness; the same config set is what we would ship on
 a 1000-executor cluster (AQE, skew-join handling, partition-size-targeted
-coalescing, pushdown-friendly parquet options). Nothing here is
-local-specific except the master URL and shuffle-partition count, both
-overridable.
+coalescing, pushdown-friendly parquet options). Two things depend on the
+master: the shuffle-partition count, and, on a local master, the streaming
+checkpoint file manager (see `master_conf`). Both are overridable.
 """
 
 from __future__ import annotations
@@ -19,6 +19,12 @@ from pyspark.sql import SparkSession
 # tuning knob, so a large static value + AQE is the scale-safe choice.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def default_driver_memory() -> str:
     """`spark.driver.memory` unless SPARK_GRAFT_DRIVER_MEM is set: 16g,
@@ -30,6 +36,29 @@ def default_driver_memory() -> str:
     except (ValueError, OSError):
         return "16g"
     return f"{min(16 * 1024, physical // 2 // 2**20)}m"
+
+
+def master_conf(
+    master: str, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """The settings `get_spark` derives from the resolved `master` URL,
+    with `extra_conf` laid over them."""
+    conf: dict[str, str] = {}
+    if master.startswith("local"):
+        # Streaming checkpoints (source/offset/commit logs, state-store
+        # deltas) go through Hadoop's FileSystem API, not Spark's
+        # FileContext default. Without libhadoop, the local FileContext
+        # runs `readlink` four times per rename: 58 of the 83 processes a
+        # Demo2 windows micro-batch started (SCALING.md "Checkpoint
+        # writes"). On a local file system both rename with POSIX
+        # rename(2), which replaces atomically. Cluster masters keep the
+        # default: HDFS `FileSystem.rename` refuses an existing target, so
+        # a re-run batch would keep a stale state-store delta. A local
+        # master with its checkpoints on HDFS should set the key back
+        # through `extra_conf`.
+        conf[CHECKPOINT_MANAGER_KEY] = LOCAL_CHECKPOINT_MANAGER
+    conf.update(extra_conf or {})
+    return conf
 
 
 def get_spark(
@@ -58,9 +87,10 @@ def get_spark(
         )
 
     cpus = DEFAULT_CPUS
+    master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions if shuffle_partitions is not None else cpus),
@@ -111,7 +141,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in master_conf(master, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
