@@ -2,9 +2,10 @@
 
 Local mode is the test harness; the same config set is what we would ship on
 a 1000-executor cluster (AQE, skew-join handling, partition-size-targeted
-coalescing, pushdown-friendly parquet options). Two things depend on the
-master: the shuffle-partition count, and, on a local master, the streaming
-checkpoint file manager (see `master_conf`). Both are overridable.
+coalescing, pushdown-friendly parquet options). Local-specific are the
+master URL, the shuffle-partition count and, on a local master, the
+streaming checkpoint file manager (see `master_conf`); all are
+overridable.
 """
 
 from __future__ import annotations
