@@ -1,6 +1,8 @@
 """Streaming checkpoints on a local master go through Hadoop's FileSystem
-API: no `readlink` per rename, and a checkpoint written through Spark's
-FileContext default restarts under it."""
+API, and `file://` through the engine's java.nio-permission file system: a
+drain starts no process (no `readlink` per rename, no `chmod` per created
+file), and a checkpoint written through Spark's FileContext default
+restarts under it."""
 
 from __future__ import annotations
 
@@ -19,9 +21,16 @@ FILE_CONTEXT_MANAGER = (
 )
 
 
+LOCAL_CONF = {
+    KEY: session.LOCAL_CHECKPOINT_MANAGER,
+    session.LOCAL_FS_KEY: session.NIO_LOCAL_FS,
+    session.DRIVER_CLASSPATH_KEY: session.NIO_LOCAL_FS_JAR,
+}
+
+
 @pytest.mark.parametrize("master", ["local", "local[2]", "local[*]"])
 def test_local_masters_select_the_file_system_manager(master):
-    assert session.master_conf(master) == {KEY: session.LOCAL_CHECKPOINT_MANAGER}
+    assert session.master_conf(master) == LOCAL_CONF
 
 
 @pytest.mark.parametrize(
@@ -30,11 +39,38 @@ def test_local_masters_select_the_file_system_manager(master):
 def test_cluster_masters_keep_the_spark_default(master):
     assert session.master_conf(master) == {}
     assert session.master_conf(master, {"spark.x": "1"}) == {"spark.x": "1"}
+    path = {session.DRIVER_CLASSPATH_KEY: "extra/a.jar"}
+    assert session.master_conf(master, path) == path
 
 
 def test_extra_conf_wins_over_the_master_default():
     conf = session.master_conf("local[2]", {KEY: FILE_CONTEXT_MANAGER})
-    assert conf == {KEY: FILE_CONTEXT_MANAGER}
+    assert conf == {**LOCAL_CONF, KEY: FILE_CONTEXT_MANAGER}
+
+
+def test_callers_file_system_wins():
+    impl = "org.apache.hadoop.fs.LocalFileSystem"
+    conf = session.master_conf("local[2]", {session.LOCAL_FS_KEY: impl})
+    assert conf == {**LOCAL_CONF, session.LOCAL_FS_KEY: impl}
+
+
+def test_callers_driver_class_path_is_kept_after_the_jar():
+    theirs = os.pathsep.join(["extra/a.jar", "extra/b/*"])
+    conf = session.master_conf("local[2]", {session.DRIVER_CLASSPATH_KEY: theirs})
+    assert conf[session.DRIVER_CLASSPATH_KEY] == os.pathsep.join(
+        [session.NIO_LOCAL_FS_JAR, theirs]
+    )
+    assert conf[session.LOCAL_FS_KEY] == session.NIO_LOCAL_FS
+
+
+def test_jvm_without_the_jar_gets_no_file_system():
+    conf = session.master_conf(
+        "local[2]", {session.DRIVER_CLASSPATH_KEY: "extra/a.jar"}, nio_local_fs=False
+    )
+    assert conf == {
+        KEY: session.LOCAL_CHECKPOINT_MANAGER,
+        session.DRIVER_CLASSPATH_KEY: "extra/a.jar",
+    }
 
 
 def test_engine_session_creates_the_file_system_manager(spark, tmp_path):
@@ -71,22 +107,42 @@ def _fingerprint(workload, out):
     return rows, digest
 
 
-def test_windows_drain_runs_no_readlink(spark, tmp_path, jvm_process_starts):
-    """A Demo2 windows drain writes source, offset and commit log entries
-    and state-store deltas every micro-batch; through FileContext on a host
-    without libhadoop, every rename of them ran `readlink` four times (776
-    over this drain in an 8-thread session)."""
-    events = gen.generate(
-        gen.Shape(files=4, events_per_file=500, users=50), 11, str(tmp_path / "in")
+@pytest.mark.parametrize(
+    "workload, files",
+    [("clickstream_windows", 4), ("clickstream_panes", 1)],
+    ids=["windows", "panes"],
+)
+def test_drain_starts_no_process(
+    spark, tmp_path, jvm_process_starts, workload, files
+):
+    """A Demo2 drain writes source, offset and commit log entries,
+    state-store deltas and parquet task and job files every micro-batch.
+    On a host without libhadoop, Hadoop's FileContext ran `readlink` four
+    times per rename, and its RawLocalFileSystem ran `chmod` for every
+    created file and directory (174 per 7-batch perfbench windows drain,
+    114 per 4-batch panes drain)."""
+    gen.generate(
+        gen.Shape(files=files, events_per_file=500, users=50),
+        11,
+        str(tmp_path / "in"),
     )
-    runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+    # Once per JVM, not per drain: the pane operator's Python workers
+    # fork from the worker daemon, which the JVM starts, and the first
+    # executor heartbeat runs `getconf PAGESIZE`.
+    spark.range(1).mapInPandas(lambda frames: frames, "id long").collect()
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.spark.executor.ProcfsMetricsGetter.pTreeInfo()
+    runtime = jvm.java.lang.Runtime.getRuntime()
     with jvm_process_starts() as commands:
         runtime.exec("true").waitFor()  # the recorder sees the JVM's processes
-        progress = _drain(spark, "clickstream_windows", tmp_path / "in", tmp_path)
-    names = [os.path.basename(c.split()[0]) for c in commands]
-    assert "true" in names
-    assert sum(p["numInputRows"] > 0 for p in progress) >= 3
-    assert names.count("readlink") == 0
+        progress = _drain(spark, workload, tmp_path / "in", tmp_path)
+    assert sum(p["numInputRows"] > 0 for p in progress) == files
+    # Not the drain's work: whenever a garbage collection finds a dropped
+    # session (each streaming query runs in a clone), Spark's
+    # ArtifactManager removes its directory with `rm -rf .../artifacts-*`
+    # on the JVM's Cleaner thread.
+    drain_commands = [c for c in commands if "/artifacts-" not in c]
+    assert [os.path.basename(c.split()[0]) for c in drain_commands] == ["true"]
 
 
 @pytest.mark.parametrize(

@@ -4,14 +4,18 @@ Local mode is the test harness; the same config set is what we would ship on
 a 1000-executor cluster (AQE, skew-join handling, partition-size-targeted
 coalescing, pushdown-friendly parquet options). Local-specific are the
 master URL, the shuffle-partition count and, on a local master, the
-streaming checkpoint file manager (see `master_conf`); all are
-overridable.
+streaming checkpoint file manager and the `file://` file system (see
+`master_conf`); all are overridable. The file system is
+`jvm/NioLocalFileSystem.java`, committed with its jar built by
+`tools/build_nio_fs_jar.py`, so no JDK is needed at run time.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # At cluster scale, shuffle partitions should target ~128-200 MB per task
@@ -25,6 +29,12 @@ LOCAL_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+LOCAL_FS_KEY = "spark.hadoop.fs.file.impl"
+NIO_LOCAL_FS = "tutorial_apache_beam_spark.hadoop.NioLocalFileSystem"
+NIO_LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar"
+)
+DRIVER_CLASSPATH_KEY = "spark.driver.extraClassPath"
 
 
 def default_driver_memory() -> str:
@@ -40,10 +50,15 @@ def default_driver_memory() -> str:
 
 
 def master_conf(
-    master: str, extra_conf: dict[str, str] | None = None
+    master: str,
+    extra_conf: dict[str, str] | None = None,
+    nio_local_fs: bool = True,
 ) -> dict[str, str]:
     """The settings `get_spark` derives from the resolved `master` URL,
-    with `extra_conf` laid over them."""
+    with `extra_conf` laid over them. `nio_local_fs=False` leaves out the
+    `file://` file system: a JVM started without its jar on the class
+    path would fail its first file access."""
+    extra = dict(extra_conf or {})
     conf: dict[str, str] = {}
     if master.startswith("local"):
         # Streaming checkpoints (source/offset/commit logs, state-store
@@ -58,8 +73,34 @@ def master_conf(
         # master with its checkpoints on HDFS should set the key back
         # through `extra_conf`.
         conf[CHECKPOINT_MANAGER_KEY] = LOCAL_CHECKPOINT_MANAGER
-    conf.update(extra_conf or {})
+        if nio_local_fs:
+            # `file://` through Hadoop's checksummed LocalFileSystem with
+            # its permissions set through java.nio: without libhadoop,
+            # Hadoop runs a `chmod` process for every file and directory
+            # it creates (checkpoint and state-store files, parquet task
+            # and job files; ~25 per Demo2 micro-batch; SCALING.md "File
+            # permissions"). Local mode runs the executors in the driver
+            # JVM, so the driver class path is enough; a caller's own
+            # class path is kept after the jar.
+            conf[LOCAL_FS_KEY] = NIO_LOCAL_FS
+            conf[DRIVER_CLASSPATH_KEY] = os.pathsep.join(
+                filter(None, [NIO_LOCAL_FS_JAR, extra.pop(DRIVER_CLASSPATH_KEY, "")])
+            )
+    conf.update(extra)
     return conf
+
+
+def _jvm_lacks_nio_local_fs() -> bool:
+    """True when this process's JVM is already running without the
+    `file://` file system's jar: its class path is fixed at launch."""
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return False
+    try:
+        jvm.java.lang.Class.forName(NIO_LOCAL_FS)
+    except Py4JError:
+        return True
+    return False
 
 
 def get_spark(
@@ -142,7 +183,10 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
         )
     )
-    for k, v in master_conf(master, extra_conf).items():
+    conf = master_conf(
+        master, extra_conf, nio_local_fs=not _jvm_lacks_nio_local_fs()
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
